@@ -33,14 +33,13 @@ import graft.core.{QueryDef, Tables}
   *    rename on HDFS-shaped stores, a conditional put on object
   *    stores) — so a version is either fully readable or invisible;
   *    readers can never resolve a half-written manifest, and a writer
-  *    crash leaves only a hidden temp file [[vacuum]] sweeps (readers
-  *    additionally treat a zero-length `v<N>` as uncommitted garbage,
-  *    belt-and-braces for legacy torn writes). The new manifest lists
-  *    untouched buckets' existing files plus the rewritten buckets' new
-  *    files. Readers resolve a manifest (latest by default, any
-  *    retained version on request — TIME TRAVEL, the pinned-snapshot
-  *    reproducibility a training job needs while CDC keeps flowing)
-  *    and scan exactly its file list;
+  *    crash leaves only a hidden temp file [[vacuum]] sweeps (a
+  *    zero-length `v<N>` is torn garbage, never a version). The new
+  *    manifest lists untouched buckets' existing files plus the
+  *    rewritten buckets' new files. Readers resolve a manifest
+  *    (latest by default, any retained version on request — TIME
+  *    TRAVEL, the pinned-snapshot reproducibility a training job
+  *    needs while CDC keeps flowing) and scan exactly its file list;
   *  - MULTI-WRITER: every epoch write lands under a writer-unique
   *    ATTEMPT dir (`v=<N>-<writerTag>`), so two committers racing to
   *    version N never touch each other's files; the manifest promotion
@@ -139,13 +138,17 @@ object MergeTable {
 
   // ---- manifests ---------------------------------------------------
   // one text file per committed version under _manifests/, named
-  // v<zero-padded N>; line 1 is the "#hex=<d>" bucket-width header
-  // (absent in legacy manifests → HEX_DIGITS), then one
-  // "#fp=<bucket>:<rows>:<hashsum>" CONTENT-FINGERPRINT line per
-  // non-empty bucket (absent in legacy manifests — see
-  // [[changedBuckets]] for the per-bucket fallback), every other line
-  // a data-file path RELATIVE to <dir>/data (e.g.
-  // "v=2-41x7/bucket=a3/part-....parquet"). Commits land via a hidden
+  // v<zero-padded N>, in ONE format. Header lines: "#format=1", the
+  // "#hex=<d>" bucket width and the "#ts=<millis>" in-commit
+  // timestamp; one "#fp=<bucket>:<rows>:<h1>:<h2>" CONTENT-FINGERPRINT
+  // line per listed bucket; one "#esch=<epoch>|<schema json>" line per
+  // epoch that owns a listed file (an empty snapshot keeps its
+  // predecessor's, so it still reads typed); then the optional
+  // annotations (#tok=, #prop=, #col=, #requires=/#dv=/#dvf=, #st=,
+  // #bl=). Every other line is a data-file path RELATIVE to <dir>/data
+  // (e.g. "v=2-41x7/bucket=a3/part-....parquet"). [[readManifestFull]]
+  // refuses a manifest missing any required line, so no reader
+  // downstream of it handles a partial one. Commits land via a hidden
   // ".v<N>.<tag>.tmp" sibling promoted atomically, so a listed,
   // non-empty v<N> is always a COMPLETE manifest.
 
@@ -154,9 +157,8 @@ object MergeTable {
     new Path(manifestDir(dir), f"v$v%09d")
 
   /** Manifest names on disk with their byte lengths, ascending by
-    * version — the shared parse behind [[versions]]/[[commitManifest]]:
-    * which zero-length files count as committed is a JOINT decision
-    * (see versions' Scaladoc) and must not be made twice. */
+    * version — the listing behind [[versions]], and the signature
+    * [[fileStatsIndex]] caches against. */
   private def manifestLens(spark: SparkSession,
       dir: String): Seq[(Long, Long)] = {
     val fs = hadoopFs(spark, dir)
@@ -172,26 +174,13 @@ object MergeTable {
   }
 
   /** Committed versions at `dir`, ascending (empty → no table yet).
-    * Hidden temp names are uncommitted garbage. A ZERO-LENGTH `v<N>`
-    * is ambiguous: the CURRENT writer never produces one (every commit
-    * carries at least the `#hex=` header), but the legacy format wrote
-    * zero bytes for a committed snapshot whose every row was deleted,
-    * and a legacy torn write looks identical. Disambiguation: a
-    * zero-length manifest BELOW the highest non-empty version is a
-    * legacy committed-empty snapshot (history — dropping it would let
-    * its version number be re-committed with different contents,
-    * corrupting time travel); one AT OR ABOVE it is torn garbage,
-    * invisible and reclaimable. A legacy table whose LATEST snapshot
-    * is empty is genuinely undecidable — re-commit it under the
-    * current format before multi-writer use (migration note). */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val all = manifestLens(spark, dir)
-    val maxNonEmpty = all.collect { case (v, len) if len > 0 => v }
-      .maxOption
-    all.collect {
-      case (v, len) if len > 0 || maxNonEmpty.exists(v < _) => v
-    }
-  }
+    * Hidden temp names are uncommitted garbage, and so is a
+    * ZERO-LENGTH `v<N>`: every commit writes at least its header
+    * lines, so zero bytes can only be a torn write — not a version,
+    * and its number may be committed again ([[commitManifest]]
+    * replaces it). */
+  def versions(spark: SparkSession, dir: String): Seq[Long] =
+    manifestLens(spark, dir).collect { case (v, len) if len > 0 => v }
 
   /** Size-bounded LRU for driver-side metadata caches: the cached
     * facts are immutable (promoted manifests, epoch schemas) so any
@@ -225,22 +214,27 @@ object MergeTable {
 
   private final case class ManifestData(hexDigits: Int,
     entries: Seq[String], fps: Map[String, String],
-    tokens: Map[String, Long] = Map.empty,
-    sts: Map[String, String] = Map.empty,
-    cols: Map[String, String] = Map.empty,
-    dvs: Seq[String] = Nil,
-    dvf: Map[String, Long] = Map.empty,
-    props: Map[String, String] = Map.empty,
-    bls: Map[String, String] = Map.empty,
-    ts: Option[Long] = None,
-    eschs: Map[String, String] = Map.empty)
+    tokens: Map[String, Long], sts: Map[String, String],
+    cols: Map[String, String], dvs: Seq[String],
+    dvf: Map[String, Long], props: Map[String, String],
+    bls: Map[String, String], ts: Long,
+    eschs: Map[String, String])
+
+  /** The one manifest format this engine writes and reads. */
+  private val ManifestFormat = 1
+
+  /** A committed manifest that is not a complete format-1 manifest
+    * (a required line missing, or another format): the read refuses
+    * instead of guessing, so no caller ever sees a partial manifest. */
+  final class UnreadableManifestException(msg: String)
+    extends IllegalStateException(msg)
 
   /** Reader capabilities THIS engine implements. A manifest whose
     * `#requires=` lines name anything else fails loudly at read time —
     * the Delta minReaderVersion discipline re-expressed as named
     * capabilities: a feature whose silent omission would corrupt reads
     * (deletion vectors — an ignorant reader resurrects deleted rows)
-    * gates the READER, while purely-advisory lines (`#st2=`, `#prop=`)
+    * gates the READER, while purely-advisory lines (`#st=`, `#prop=`)
     * degrade soundly and gate nothing. */
   private val ReaderCapabilities: Set[String] = Set("dv")
 
@@ -264,15 +258,10 @@ object MergeTable {
     val st =
       try Some(fs.getFileStatus(p))
       catch { case _: java.io.FileNotFoundException => None }
-    val len = st.map(_.getLen)
-    val committed = len.exists(_ > 0) ||
-      (len.contains(0L) && versions(spark, dir).contains(v))
-    if (!committed)
+    if (!st.exists(_.getLen > 0))
       throw new IllegalArgumentException(
         s"MergeTable at $dir has no version $v (vacuumed or never " +
           s"committed); retained: ${versions(spark, dir).mkString(",")}")
-    if (len.contains(0L)) // legacy committed-empty snapshot
-      return ManifestData(HEX_DIGITS, Seq.empty, Map.empty)
     val (stLen, stMod) = (st.get.getLen, st.get.getModificationTime)
     manifestCache.get((dir, v)) match {
       case Some((l, m, md)) if l == stLen && m == stMod => return md
@@ -283,9 +272,19 @@ object MergeTable {
       try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().map(_.trim).filter(_.nonEmpty).toList
       finally in.close()
-    val hex = lines.collectFirst {
-      case l if l.startsWith("#hex=") => l.drop(5).trim.toInt
-    }.getOrElse(HEX_DIGITS)
+    def unreadable(what: String): Nothing =
+      throw new UnreadableManifestException(
+        s"manifest v$v at $dir is not a complete format-$ManifestFormat " +
+          s"manifest: $what — refusing to read it (restore the file " +
+          "from a copy of the table)")
+    def header(tag: String): String = lines.collectFirst {
+      case l if l.startsWith(tag) => l.drop(tag.length).trim
+    }.getOrElse(unreadable(s"no $tag line"))
+    val format = header("#format=")
+    if (format != ManifestFormat.toString)
+      unreadable(s"format '$format', this engine reads $ManifestFormat")
+    val hex = header("#hex=").toInt
+    val ts = header("#ts=").toLong
     val fps = lines.collect {
       case l if l.startsWith("#fp=") =>
         val body = l.drop(4)
@@ -313,23 +312,13 @@ object MergeTable {
       case _ => None
     }.toMap
     // per-FILE column stats: "#st=<relpath>|col:min:max|..." — keyed
-    // by the entry path (a data file's stats are immutable with it).
-    // `#st=` carries the pre-round-15 integral/all-null tokens and
-    // `#st2=` the typed string bounds (see writeManifest's version
-    // gate); a file's internal body is the union of both lines.
-    val sts = lines.flatMap { l =>
-      val tag = if (l.startsWith("#st2=")) 5
-        else if (l.startsWith("#st=")) 4 else -1
-      if (tag < 0) None
-      else {
-        val body = l.drop(tag)
+    // by the entry path (a data file's stats are immutable with it)
+    val sts = lines.collect {
+      case l if l.startsWith("#st=") =>
+        val body = l.drop(4)
         val cut = body.indexOf('|')
-        if (cut < 0) Some(body -> "")
-        else Some(body.take(cut) -> body.drop(cut + 1))
-      }
-    }.groupBy(_._1).map { case (f, bs) =>
-      f -> bs.map(_._2).filter(_.nonEmpty).mkString("|")
-    }
+        if (cut < 0) body -> "" else body.take(cut) -> body.drop(cut + 1)
+    }.toMap
     // COLUMN MAPPING (the Iceberg id-model re-expressed over names):
     // "#col=<physical>:<logical>" — the parquet files keep their
     // immutable PHYSICAL column names forever; the snapshot's LOGICAL
@@ -393,38 +382,30 @@ object MergeTable {
     }.groupBy(_._1).map { case (f, bs) =>
       f -> bs.map(_._2).filter(_.nonEmpty).mkString("|")
     }
-    // IN-COMMIT TIMESTAMP (`#ts=<epochMillis>`): the commit's own wall
-    // clock, written with the manifest so copies/restores of the
-    // directory cannot shift history (the Delta ICT rationale); legacy
-    // manifests fall back to file mtime in [[commitTimes]].
-    val ts = lines.collectFirst {
-      case l if l.startsWith("#ts=") => l.drop(4).trim.toLong
-    }
     // per-EPOCH physical schemas ("#esch=<epochName>|<StructType
     // json>") — the Iceberg/Delta schema-in-metadata discipline: a
-    // snapshot read whose every epoch carries one resolves its scan
-    // schema from the manifest alone, O(retained epochs), instead of
-    // merging O(table files) parquet footers in a plan-time Spark
-    // job. Advisory: an epoch without a line (legacy commit) routes
-    // the read through the footer-merge probe, which is merely
-    // slower, never wrong.
+    // snapshot read resolves its scan schema from the manifest alone,
+    // O(retained epochs), never from parquet footers
     val eschs = lines.collect {
       case l if l.startsWith("#esch=") =>
         val body = l.drop(6)
         val cut = body.indexOf('|')
-        // loud-on-corruption, the manifest discipline: a line with no
-        // '|' (or an empty epoch name) is not a legacy format — no
-        // writer ever produced one — so parsing it as epoch "" and
-        // silently dropping it at the next commit would swallow
-        // manifest corruption instead of surfacing it
-        if (cut <= 0) throw new IllegalStateException(
-          s"manifest v$v at $dir carries a malformed #esch= line " +
-            s"('${l.take(80)}'): no epoch|schema separator — the " +
-            "manifest is corrupt; restore it before reading")
+        if (cut <= 0)
+          unreadable(s"malformed #esch= line ('${l.take(80)}')")
         body.take(cut) -> body.drop(cut + 1)
     }.toMap
-    val parsed = ManifestData(hex, lines.filterNot(_.startsWith("#")),
-      fps, toks, sts, colMap, dvs, dvf, props, bls, ts, eschs)
+    val entries = lines.filterNot(_.startsWith("#"))
+    val buckets = entries.map(bucketOfEntry).distinct
+    val blind = buckets.filterNot(fps.contains)
+    if (blind.nonEmpty)
+      unreadable(s"no #fp= line for bucket(s) ${blind.sorted.mkString(", ")}")
+    val noSchema = entries.map(e => e.take(e.indexOf('/'))).distinct
+      .filterNot(eschs.contains)
+    if (noSchema.nonEmpty)
+      unreadable(
+        s"no #esch= line for epoch(s) ${noSchema.sorted.mkString(", ")}")
+    val parsed = ManifestData(hex, entries, fps, toks, sts, colMap, dvs,
+      dvf, props, bls, ts, eschs)
     manifestCache.put((dir, v), (stLen, stMod, parsed))
     parsed
   }
@@ -929,26 +910,28 @@ object MergeTable {
       val wides1 = widesOf(man.props) + (phys -> to)
       // RE-ATTESTATION: recompute every bucket's live-content
       // fingerprint under the widened hash regime (DV-applied — fps
-      // attest LIVE rows); a bucket attested before but with zero
-      // live rows keeps its width-matched all-zero attestation
-      val live = readEntries(spark, dir,
-        man.copy(props = man.props +
-          (WidenPropPrefix + phys -> to.catalogString)), man.entries)
-      val payload = live.columns.filter(_ != "bucket").sorted.toSeq
-      val computed = live
-        .select(col("bucket") +: fpHashCols(payload): _*)
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), sum("fp_h").as("h"),
-          sum("fp_h2").as("h2"))
-        .collect()
-        .map(r => r.getString(0) ->
-          s"${r.getLong(1)}:${BigInt(r.getDecimal(2).toBigInteger)}:${
-            BigInt(r.getDecimal(3).toBigInteger)}")
-        .toMap
-      val newFps = man.fps.map { case (b, fp) =>
-        b -> computed.getOrElse(b,
-          fp.split(":").map(_ => "0").mkString(":"))
-      } ++ (computed -- man.fps.keySet)
+      // attest LIVE rows); a bucket with zero live rows attests as
+      // the all-zero fingerprint
+      val computed =
+        if (man.entries.isEmpty) Map.empty[String, String] // emptied table
+        else {
+          val live = readEntries(spark, dir,
+            man.copy(props = man.props +
+              (WidenPropPrefix + phys -> to.catalogString)), man.entries)
+          val payload = live.columns.filter(_ != "bucket").sorted.toSeq
+          live.select(col("bucket") +: fpHashCols(payload): _*)
+            .groupBy("bucket")
+            .agg(count(lit(1)).as("n"), sum("fp_h").as("h"),
+              sum("fp_h2").as("h2"))
+            .collect()
+            .map(r => r.getString(0) ->
+              s"${r.getLong(1)}:${BigInt(r.getDecimal(2).toBigInteger)}:${
+                BigInt(r.getDecimal(3).toBigInteger)}")
+            .toMap
+        }
+      val newFps = man.fps.map { case (b, _) =>
+        b -> computed.getOrElse(b, FpZero)
+      }
       val next = cur + 1
       commitManifest(spark, dir, next, man.entries, man.hexDigits,
         newFps, tokens = man.tokens, sts = man.sts, cols = man.cols,
@@ -974,17 +957,22 @@ object MergeTable {
     * the same version loses with an explicit conflict; a crash at any
     * point leaves either a complete committed manifest or an invisible
     * temp file [[vacuum]] sweeps — never a readable half-manifest. A
-    * pre-existing ZERO-LENGTH `v<N>` is deleted and re-raced only when
-    * it sits AT OR ABOVE the highest non-empty version (a torn write);
-    * below it, it is a legacy committed-empty snapshot whose version
-    * number must never be reassigned (see [[versions]]).
+    * pre-existing ZERO-LENGTH `v<N>` is torn garbage (see
+    * [[versions]]): it is deleted and the version re-raced.
     *
-    * `fps` carries the per-bucket content fingerprints
-    * (`#fp=<bucket>:<rows>:<hashsum>` lines) — [[changedBuckets]]
-    * compares them so a layout-only rewrite contributes zero changed
-    * buckets to a later version diff. `beforePromote` is a spec-only
-    * injection point between the temp write and the promotion (the
-    * window a concurrent vacuum's stale-temp sweep can race). */
+    * The body is the one manifest format [[readManifestFull]] accepts:
+    * `#format=`, `#hex=` and `#ts=` headers, `fps` as the per-bucket
+    * content fingerprints (`#fp=<bucket>:<rows>:<h1>:<h2>` lines —
+    * [[changedBuckets]] compares them so a layout-only rewrite
+    * contributes zero changed buckets to a later version diff), and
+    * `eschs` as the per-epoch schemas — kept for the epochs that own a
+    * listed entry, or ALL of them when no entry is listed, so an
+    * emptied snapshot still knows its schema. Callers pass an `#fp=`
+    * for every listed bucket and an `#esch=` for every listed epoch;
+    * the read refuses a manifest without them. `beforePromote` is a
+    * spec-only injection point between the temp write and the
+    * promotion (the window a concurrent vacuum's stale-temp sweep can
+    * race). */
   private[ext] def commitManifest(spark: SparkSession, dir: String,
       v: Long, entries: Seq[String],
       hexDigits: Int = HEX_DIGITS,
@@ -1002,15 +990,7 @@ object MergeTable {
     fs.mkdirs(manifestDir(dir))
     val p = manifestPath(dir, v)
     try {
-      val st = fs.getFileStatus(p)
-      if (st.getLen > 0) conflict(dir, v, null)
-      val maxNonEmpty = manifestLens(spark, dir)
-        .collect { case (mv, len) if len > 0 => mv }.maxOption
-      if (maxNonEmpty.exists(_ > v))
-        throw new IllegalArgumentException(
-          s"version $v at $dir is a legacy committed-empty snapshot " +
-            "(zero-length manifest below the newest version) — its " +
-            "number is history and cannot be re-committed")
+      if (fs.getFileStatus(p).getLen > 0) conflict(dir, v, null)
       fs.delete(p, false) // zero-length TORN garbage: eligible for overwrite
     } catch { case _: java.io.FileNotFoundException => }
     val tmp = new Path(manifestDir(dir), f".v$v%09d.${attemptTag()}.tmp")
@@ -1023,31 +1003,10 @@ object MergeTable {
       s"#tok=$sid:$id"
     }
     // stats only for files the manifest actually lists (a carried-
-    // forward map may hold entries for dropped files). The line is
-    // VERSION-GATED by bound kind: `#st=` carries only the tokens the
-    // pre-round-15 wire format defined (bare longs / all-null), and
-    // string `s<hex>` bounds ride a separate `#st2=` header — a legacy
-    // reader parsing `s<hex>` through toLongOption would read
-    // (None, None), its all-null encoding, and wrongly PRUNE; an
-    // unknown `#st2=` header it merely skips (column unattested, file
-    // kept), the sound degradation.
+    // forward map may hold entries for dropped files)
     val entrySet = entries.toSet
     val stLines = sts.toSeq.filter(e => entrySet.contains(e._1))
-      .sortBy(_._1).flatMap { case (f, body) =>
-        val segs = body.split('|').toSeq.filter(_.nonEmpty)
-        val (typed, legacy) = segs.partition { seg =>
-          seg.split(":", -1) match {
-            case Array(_, mn, mx) =>
-              (mn.nonEmpty && mn.charAt(0) == 's') ||
-                (mx.nonEmpty && mx.charAt(0) == 's')
-            case _ => false
-          }
-        }
-        (if (legacy.nonEmpty || segs.isEmpty)
-           Seq(s"#st=$f|${legacy.mkString("|")}") else Nil) ++
-        (if (typed.nonEmpty) Seq(s"#st2=$f|${typed.mkString("|")}")
-         else Nil)
-      }
+      .sortBy(_._1).map { case (f, body) => s"#st=$f|$body" }
     val colLines = cols.toSeq.sortBy(_._1)
       .map { case (p, l) => s"#col=$p:$l" }
     // DELETION VECTORS: only data files the manifest still LISTS keep
@@ -1070,9 +1029,11 @@ object MergeTable {
     // blooms only for files the manifest lists (the stats discipline)
     val blLines = bls.toSeq.filter(e => entrySet.contains(e._1))
       .sortBy(_._1).map { case (f, body) => s"#bl=$f|$body" }
-    // epoch schemas only for epochs that still own a listed entry
+    // epoch schemas for epochs that still own a listed entry; an
+    // empty snapshot keeps them all (its read's only schema source)
     val liveEpochs = entries.map(e => e.take(e.indexOf('/'))).toSet
-    val eschLines = eschs.toSeq.filter(e => liveEpochs.contains(e._1))
+    val eschLines = eschs.toSeq
+      .filter(e => entries.isEmpty || liveEpochs.contains(e._1))
       .sortBy(_._1).map { case (ep, json) =>
         require(!json.exists(c => c == '\n' || c == '\r'),
           s"epoch schema for $ep must be single-line JSON")
@@ -1085,11 +1046,10 @@ object MergeTable {
     // raw-anchored write), vacuuming early versions under writer
     // clock skew could shift later versions' EFFECTIVE times
     // backwards and re-resolve a past AS OF probe to a different
-    // snapshot — including on tables with a legacy (mtime-clocked)
-    // prefix, where raw clocks may interleave and the raw anchor
-    // undercuts the chain. A persisted-monotone chain is stable
-    // under any history expiry; [[commitTimes]]' read-time pass
-    // remains for legacy manifests and is the identity over commits
+    // snapshot — including on tables whose raw clocks interleave
+    // (writer clock skew), where the raw anchor undercuts the chain.
+    // A persisted-monotone chain is stable under any history expiry;
+    // [[commitTimes]]' read-time pass is the identity over commits
     // written here. Raw clocks ride [[rawTs]]'s immutable cache, so
     // a warm writer pays ZERO extra manifest reads for the anchor.
     val prevEff = effectiveTs(spark, dir,
@@ -1097,7 +1057,7 @@ object MergeTable {
     val commitTs = math.max(System.currentTimeMillis(),
       prevEff.map(_ + 1L).getOrElse(Long.MinValue))
     try out.write(
-      ((Seq(s"#hex=$hexDigits",
+      ((Seq(s"#format=$ManifestFormat", s"#hex=$hexDigits",
         s"#ts=$commitTs") ++ tokLines) ++
         propLines ++ colLines ++ eschLines ++
         dvLines ++ fpLines ++
@@ -1139,8 +1099,10 @@ object MergeTable {
     manifestCache.remove((dir, v))
   }
 
+  private val BucketDir = "bucket=([0-9a-f]+)".r
+
   private def bucketOfEntry(e: String): String = {
-    val m = "bucket=([0-9a-f]+)".r.findFirstMatchIn(e)
+    val m = BucketDir.findFirstMatchIn(e)
     m.map(_.group(1)).getOrElse(sys.error(s"manifest entry without bucket: $e"))
   }
 
@@ -1189,18 +1151,6 @@ object MergeTable {
       xxhash64(payload.map(pc): _*).cast("decimal(38,0)").as("fp_h"),
       xxhash64((lit(Fp2Salt) +: payload.map(pc)): _*)
         .cast("decimal(38,0)").as("fp_h2"))
-  }
-
-  /** Component-prefix fingerprint comparison: fingerprints are
-    * `rows:h1[:h2]` — current commits write all three, legacy
-    * manifests only two — and two attestations agree when every
-    * component BOTH carry matches. Comparing the common prefix keeps
-    * pruning and auditing working across the format upgrade (a legacy
-    * endpoint simply gets the old 64-bit guarantee); once both sides
-    * are current, all three components must match. */
-  private def fpAgrees(a: String, b: String): Boolean = {
-    val as = a.split(":"); val bs = b.split(":")
-    as.zip(bs).forall { case (x, y) => x == y }
   }
 
   /** Per-bucket CONTENT fingerprint of a just-written epoch: row count
@@ -1302,17 +1252,6 @@ object MergeTable {
     * class). Stats cover the integral payload columns; min/max are of
     * non-null values, an all-null file rendering as an empty range a
     * null-rejecting predicate may prune. */
-  /** PROBE-ONLY flag (`-Dgraft.cow.probe.bareFingerprints=true`):
-    * emulates the round-13 commit shape — bucket-grain grouping, one
-    * hash channel, no per-file stats — so [[graft.tools.ScaleProbe]]
-    * can A/B the write-path cost of the round-14/15 manifest
-    * annotations against a bare upsert. Never set in production: it
-    * writes legacy-format fingerprints and NO `#st=` lines (sound —
-    * unattested files are simply never pruned — but it forfeits file
-    * pruning and 128-bit collision resistance for that epoch). */
-  private def bareFingerprintProbe: Boolean =
-    java.lang.Boolean.getBoolean("graft.cow.probe.bareFingerprints")
-
   private def epochStats(spark: SparkSession, dir: String,
       epochName: String,
       wides: Map[String, org.apache.spark.sql.types.DataType] =
@@ -1328,19 +1267,6 @@ object MergeTable {
     val schemaJson = org.apache.spark.sql.types.StructType(
       df.schema.filterNot(_.name == "bucket")).json
     val payload = df.columns.filter(_ != "bucket").sorted
-    if (bareFingerprintProbe) {
-      // r13 shape: per-BUCKET single-channel fingerprints, no stats
-      val rows = df.select(
-          regexp_extract(col("_metadata.file_path"),
-            "bucket=([0-9a-f]+)/", 1).as("fp_bucket"),
-          xxhash64(payload.map(col): _*).cast("decimal(38,0)").as("fp_h"))
-        .groupBy("fp_bucket")
-        .agg(count(lit(1)).as("n"), sum("fp_h").as("h"))
-        .collect()
-      return (rows.map(r => r.getString(0) ->
-        s"${r.getLong(1)}:${BigInt(r.getDecimal(2).toBigInteger)}").toMap,
-        Map.empty, schemaJson)
-    }
     val stCols = statColumns(df.schema)
     // the bucket id comes from the FILE PATH, not the inferred
     // partition column: partition-type inference turns an epoch whose
@@ -1818,7 +1744,7 @@ object MergeTable {
   }
 
   final case class FsckDeepReport(bucketsChecked: Long,
-    mismatched: Seq[String], unattested: Seq[String])
+    mismatched: Seq[String])
 
   /** DEEP FSCK — re-verify a snapshot's at-rest CONTENT against the
     * manifest's per-bucket fingerprints: recompute (row count,
@@ -1827,9 +1753,9 @@ object MergeTable {
     * fingerprints exist for changefeed pruning, but they are equally
     * an integrity contract — a flipped bit, a truncated file, a
     * lost-update overwrite, or a fingerprint-inheritance bug all land
-    * a bucket in `mismatched`; a bucket whose manifest carries no
-    * fingerprint (legacy writer) lands in `unattested`, checked for
-    * existence by the metadata [[fsck]] but content-unverifiable.
+    * a bucket in `mismatched`. Every listed bucket is checked: the
+    * manifest read refuses a snapshot with a bucket that carries no
+    * fingerprint, so `bucketsChecked` is the snapshot's bucket count.
     *
     * Cost is EXPLICITLY O(snapshot data): one pruned columnar scan of
     * every live file — the opt-in deep audit, not the metadata walk
@@ -1847,7 +1773,7 @@ object MergeTable {
       throw new IllegalArgumentException(s"no MergeTable at $dir")))
     val man = readManifestFull(spark, dir, v)
     if (man.entries.isEmpty)
-      return FsckDeepReport(0L, Seq.empty, Seq.empty)
+      return FsckDeepReport(0L, Seq.empty)
     val df = readEntries(spark, dir, man, man.entries)
     val payload = df.columns.filter(_ != "bucket").sorted
     val actual = df.select(col("bucket") +: fpHashCols(payload): _*)
@@ -1860,18 +1786,12 @@ object MergeTable {
           r.getDecimal(3).toBigInteger}")
       .toMap
     val buckets = man.entries.map(bucketOfEntry).distinct
-    val (attested, unattested) = buckets.partition(man.fps.contains)
-    // prefix comparison: a legacy two-component attestation verifies
-    // its two components; a current one all three. A bucket whose
-    // every row is TOMBSTONED (merge-on-read) lists files but scans
-    // to zero rows — its recompute is the implicit all-zero
-    // fingerprint, exactly what the exact decrement left attested.
-    val mismatched = attested.filter { b =>
-      val zero = man.fps(b).split(":").map(_ => "0").mkString(":")
-      !fpAgrees(man.fps(b), actual.getOrElse(b, zero))
-    }
-    FsckDeepReport(attested.size.toLong, mismatched.sorted,
-      unattested.sorted)
+    // a bucket whose every row is TOMBSTONED (merge-on-read) lists
+    // files but scans to zero rows — its recompute is the implicit
+    // all-zero fingerprint, exactly what the exact decrement left
+    val mismatched = buckets.filter(b =>
+      man.fps(b) != actual.getOrElse(b, FpZero))
+    FsckDeepReport(buckets.size.toLong, mismatched.sorted)
   }
 
   private def writeEpoch(df: DataFrame, dir: String, epochName: String,
@@ -1931,15 +1851,13 @@ object MergeTable {
     freshRows: Long)
 
   /** Row count carried by a fingerprint map (the `rows` component of
-    * each `rows:h1[:h2]` value). FORMAT-COUPLED to the fingerprint
-    * writer ([[epochStats]] renders `n:h1:h2`, legacy manifests carry
-    * `n:h1` or bare `n`) — FingerprintRowsSpec pins the coupling so a
-    * future wire change fails a unit test before it mis-derives
-    * CowStats.rowsMatched. ext-visible for that spec only. */
+    * each `rows:h1:h2` value). FORMAT-COUPLED to the fingerprint
+    * writer ([[epochStats]] renders `n:h1:h2`) — FingerprintRowsSpec
+    * pins the coupling so a future wire change fails a unit test
+    * before it mis-derives CowStats.rowsMatched. ext-visible for that
+    * spec only. */
   private[ext] def fpRows(fps: Map[String, String]): Long =
-    fps.valuesIterator.map(v => v.substring(0,
-      v.indexOf(':') match { case -1 => v.length; case i => i }).toLong)
-      .sum
+    fps.valuesIterator.map(fpRows).sum
 
   /** Spec instrumentation: epoch DATA writes vs conflict-scoped fast
     * re-commits — the two-writer spec asserts a disjoint-bucket race
@@ -2185,10 +2103,8 @@ object MergeTable {
     * order, `b`'s new fields appended; a shared field keeps `a`'s
     * slot (metadata included — every epoch stamps the key, so the
     * KeyHexMeta survives whichever side seeds) with nullability
-    * widened. None on a dataType conflict — the caller falls back to
-    * the footer-merge probe, whose numeric-widening reconciliation is
-    * the authority for schemas this engine's extend-only writers
-    * never produce. */
+    * widened. None on a dataType conflict, which this engine's
+    * extend-only writers never produce. */
   private def mergeEpochSchemas(a: org.apache.spark.sql.types.StructType,
       b: org.apache.spark.sql.types.StructType)
       : Option[org.apache.spark.sql.types.StructType] = {
@@ -2203,37 +2119,34 @@ object MergeTable {
       } ++ b.fields.filterNot(f => an.contains(f.name))))
   }
 
-  /** The union DATA schema of `entries` resolved from persisted
-    * `#esch=` lines alone — Some only when EVERY epoch in the subset
-    * carries one and the union is conflict-free; epochs merge in
-    * version order (deterministic however the entry list is
-    * ordered). */
-  private def persistedSchema(entries: Seq[String],
-      eschs: Map[String, String])
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val epochs = entries.map(e => e.take(e.indexOf('/'))).distinct
-    if (!epochs.forall(eschs.contains)) None
-    else scala.util.Try {
-      def vOf(ep: String): Long =
-        ep.drop(2).takeWhile(_.isDigit).toLong
-      epochs.sortBy(ep => (vOf(ep), ep))
-        .map(ep => org.apache.spark.sql.types.DataType
-          .fromJson(eschs(ep))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .foldLeft(Option(org.apache.spark.sql.types.StructType(Nil))) {
-          case (Some(acc), s) =>
-            if (acc.isEmpty) Some(s) else mergeEpochSchemas(acc, s)
-          case (None, _) => None
-        }
-    }.toOption.flatten.filter(_.nonEmpty)
+  /** The scan DATA schema of `epochs`, resolved from their persisted
+    * `#esch=` lines (the manifest read guarantees one per listed
+    * epoch). Declared TYPE WIDENINGS apply to each epoch schema BEFORE
+    * the union: a pre-widen epoch (int) and a post-widen one (long)
+    * both resolve to the declared type, so the extend-only union stays
+    * conflict-free across the promotion and the scan schema drives
+    * Spark's native parquet upcast on the old files. Epochs merge in
+    * version order (deterministic however the entry list is ordered);
+    * a conflicting union refuses loudly. */
+  private def persistedSchema(dir: String, epochs: Seq[String],
+      eschs: Map[String, String],
+      wides: Map[String, org.apache.spark.sql.types.DataType])
+      : org.apache.spark.sql.types.StructType = {
+    def vOf(ep: String): Long = ep.drop(2).takeWhile(_.isDigit).toLong
+    epochs.distinct.sortBy(ep => (vOf(ep), ep))
+      .map(ep => applyWidesTo(org.apache.spark.sql.types.DataType
+        .fromJson(eschs(ep))
+        .asInstanceOf[org.apache.spark.sql.types.StructType], wides))
+      .reduceOption((a, b) => mergeEpochSchemas(a, b).getOrElse(
+        throw new IllegalStateException(
+          s"MergeTable at $dir: epoch schemas conflict on a column " +
+            s"type (${a.simpleString} vs ${b.simpleString}) — the " +
+            "extend-only writers never produce this; the table is " +
+            "corrupt")))
+      .getOrElse(throw new IllegalStateException(
+        s"MergeTable at $dir: no epoch schema to read (a table " +
+          "created from an empty frame has none)"))
   }
-
-  /** Footer-probed DATA schema (as JSON, the `#esch=` wire form) per
-    * (dir, epoch): a legacy epoch with no persisted schema line is
-    * just as immutable as an annotated one, so the probe is paid once
-    * per JVM instead of once per scan. */
-  private val epochProbeCache =
-    new BoundedCache[(String, String), String](1 << 13)
 
   /** Resolved snapshot-scan relation cache, per SparkSession (weak —
     * a stopped session's plans must not outlive it): constructing the
@@ -2270,15 +2183,12 @@ object MergeTable {
     }
 
   private def scanEntriesRaw(spark: SparkSession, dir: String,
-      entries: Seq[String],
-      eschs: Map[String, String] = Map.empty,
-      wides: Map[String, org.apache.spark.sql.types.DataType] =
-        Map.empty): DataFrame = {
+      entries: Seq[String], eschs: Map[String, String],
+      wides: Map[String, org.apache.spark.sql.types.DataType])
+      : DataFrame = {
     // cache key: the file SET plus everything else the scan schema
     // derives from — the widenings (they change the read schema of the
-    // SAME files) and the per-epoch schema lines the caller passes (an
-    // empty map routes legacy epochs through the footer probe, whose
-    // column ORDER can differ from the persisted-schema path). The
+    // SAME files) and the per-epoch schema lines the caller passes. The
     // schema lines are folded through md5 (collision-free in practice,
     // unlike 32-bit hashCode) so the key stays small however long the
     // schema JSON grows.
@@ -2286,7 +2196,7 @@ object MergeTable {
     val schemaDigest = {
       val h = java.security.MessageDigest.getInstance("MD5")
       epochs.foreach { ep =>
-        h.update(eschs.getOrElse(ep, "").getBytes("UTF-8"))
+        h.update(eschs(ep).getBytes("UTF-8"))
         h.update(0.toByte)
       }
       h.digest().map("%02x".format(_)).mkString
@@ -2320,64 +2230,15 @@ object MergeTable {
     // string forever.
     //
     // The DATA schema comes from the manifest's persisted `#esch=`
-    // epoch schemas when the subset is fully covered — O(epochs)
-    // driver work, NO footer job however many files the snapshot
-    // lists (the Iceberg/Delta schema-in-metadata read path; field
-    // metadata, incl. the KeyHexMeta pruning stamp, rides the JSON).
-    // A legacy epoch without one falls back to the mergeSchema
-    // PROBE — one footer pass, the price every read paid before
-    // round 17.
+    // epoch schemas — O(epochs) driver work, NO footer job however
+    // many files the snapshot lists (the Iceberg/Delta
+    // schema-in-metadata read path; field metadata, incl. the
+    // KeyHexMeta pruning stamp, rides the JSON). Fields land in
+    // epoch-VERSION order: the first epoch to store a column owns
+    // its slot.
     val paths = entries.map(e => s"$dir/data/$e")
-    def footerProbe(ps: Seq[String]) =
-      org.apache.spark.sql.types.StructType(
-        spark.read.option("basePath", s"$dir/data")
-          .option("mergeSchema", "true").parquet(ps: _*)
-          .schema.filterNot(f => f.name == "bucket" || f.name == "v"))
-    // declared TYPE WIDENINGS apply to each epoch schema BEFORE the
-    // union: a pre-widen epoch (int) and a post-widen one (long) both
-    // resolve to the declared type, so the extend-only union stays
-    // conflict-free across the promotion and the scan schema below
-    // drives Spark's native parquet upcast on the old files
-    def widenJson(j: String): String =
-      if (wides.isEmpty) j
-      else applyWidesTo(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType], wides).json
-    val eschsW =
-      if (wides.isEmpty) eschs
-      else eschs.map { case (ep, j) => ep -> widenJson(j) }
-    val data: org.apache.spark.sql.types.StructType =
-      persistedSchema(entries, eschsW).getOrElse {
-        // legacy epochs without `#esch=`: probe each ONCE per (dir,
-        // epoch) per JVM — an epoch's files are written in one pass
-        // and immutable, so the footer cost is paid once, not on
-        // every scan (a readEntries DV split calls this up to three
-        // times per read, and before this cache a single legacy
-        // epoch put the WHOLE snapshot back on the per-scan probe)
-        // the probe cache stores the epoch's RAW physical schema (a
-        // per-(dir, epoch) immutable fact); widening — a per-VERSION
-        // property — applies on use, so time travel to a pre-widen
-        // snapshot reads its own regime through the same cache
-        val filled = entries.groupBy(e => e.take(e.indexOf('/')))
-          .map { case (ep, es) =>
-            ep -> eschsW.getOrElse(ep,
-              widenJson(epochProbeCache.computeIfAbsent((dir, ep), _ =>
-                footerProbe(es.map(e => s"$dir/data/$e")).json)))
-          }
-        persistedSchema(entries, filled).getOrElse(
-          // a conflicting union (legacy numeric widening) stays on
-          // the global footer-merge probe — Spark's reconciliation
-          // is the authority for schemas our writers never produce.
-          // COLUMN-ORDER CONTRACT: this engine's writers are extend-
-          // only, so the persisted/per-epoch paths above yield fields
-          // in epoch-VERSION order (first epoch to store a column
-          // owns its slot). A legacy table that lands here instead
-          // gets Spark's footer-merge order (lexicographic file
-          // paths — v=10 sorts before v=2), which can differ; that
-          // order is deterministic but positional consumers
-          // (INSERT ... SELECT *) over 10+-epoch legacy tables with
-          // per-epoch schema growth should select by name
-          applyWidesTo(footerProbe(paths), wides))
-      }
+    val data = persistedSchema(dir,
+      entries.map(e => e.take(e.indexOf('/'))), eschs, wides)
     val str = org.apache.spark.sql.types.StringType
     val forced = org.apache.spark.sql.types.StructType(
       data.fields ++ Seq(
@@ -2545,14 +2406,16 @@ object MergeTable {
     val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no MergeTable at $dir")))
     val man = readManifestFull(spark, dir, v)
-    if (man.entries.isEmpty)
-      // a version whose every row died lists no files — there is no
-      // schema to infer, so name the state instead of surfacing
-      // Spark's opaque unable-to-infer error
-      throw new IllegalStateException(
-        s"version $v of the MergeTable at $dir is EMPTY (every row " +
-          "deleted): an empty snapshot carries no schema; read an " +
-          "earlier version or re-create the table")
+    if (man.entries.isEmpty) {
+      // a version whose every row died lists no files; its manifest
+      // kept the predecessor's epoch schemas, so it reads as an empty
+      // frame of the table's own type
+      val data = persistedSchema(dir, man.eschs.keys.toSeq, man.eschs,
+        widesOf(man.props))
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        data.add("bucket", org.apache.spark.sql.types.StringType))
+    }
     // mergeSchema: snapshots may mix pre- and post-evolution files
     // (upsert allows EXTEND-only schema changes); merging footers is
     // manifest-sized work, and older files' rows read null for newer
@@ -2729,9 +2592,7 @@ object MergeTable {
     * version — (v, files, buckets, rows) — from the manifests alone
     * (the fingerprint ledger every commit attests), so auditing a
     * 100 TB table's history is O(versions × manifest), zero data
-    * reads. `rows` is the fingerprint total, null for a legacy
-    * version any of whose buckets lacks one (unattestable, reported
-    * as such rather than guessed). */
+    * reads. `rows` is the fingerprint total. */
   private[graft] val historyFunctionBuilder
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -2743,20 +2604,17 @@ object MergeTable {
       history(spark, dir).queryExecution.logical
   }
 
-  /** The manifest-only version ledger behind `merge_table_history`. */
   /** Effective COMMIT TIMESTAMPS (epoch millis) per retained version,
     * STRICTLY increasing: each version's raw clock is the manifest's
-    * own `#ts=` line (in-commit — directory copies cannot shift it;
-    * legacy manifests fall back to file mtime), monotonized as
-    * eff(v) = max(raw(v), eff(prev) + 1) so clock skew between
-    * concurrent writers can never make AS OF resolution ambiguous —
-    * the Delta in-commit-timestamp discipline. The current writer
+    * own `#ts=` line (in-commit — directory copies cannot shift it),
+    * monotonized as eff(v) = max(raw(v), eff(prev) + 1) so clock skew
+    * between concurrent writers can never make AS OF resolution
+    * ambiguous — the Delta in-commit-timestamp discipline. The writer
     * already persists `#ts=` MONOTONE (max(now, predecessor + 1) at
-    * commit time — see [[commitManifest]]), so for tables written by
-    * it this read-time pass is the identity and resolution is STABLE
-    * under vacuum: expiring early history can never shift a later
-    * version's effective time (the pass remains for legacy/mtime
-    * manifests, whose raw clocks may interleave). */
+    * commit time — see [[commitManifest]]), so this read-time pass is
+    * the identity and resolution is STABLE under vacuum: expiring
+    * early history can never shift a later version's effective time
+    * (the pass still repairs a raw clock edited out of band). */
   def commitTimes(spark: SparkSession, dir: String)
       : Seq[(Long, Long)] = {
     var eff = Long.MinValue
@@ -2768,18 +2626,16 @@ object MergeTable {
     }
   }
 
-  /** A promoted manifest's RAW in-commit clock (`#ts=`, mtime for
-    * legacy manifests) is immutable — cache it per (dir, version) so
-    * the effective-time fold and every commit's monotone anchor cost
-    * zero manifest reads once warm. */
+  /** A promoted manifest's RAW in-commit clock (`#ts=`) is immutable
+    * — cache it per (dir, version) so the effective-time fold and
+    * every commit's monotone anchor cost zero manifest reads once
+    * warm. */
   private val rawTsCache =
     new BoundedCache[(String, Long), java.lang.Long](1 << 16)
 
   private def rawTs(spark: SparkSession, dir: String, v: Long): Long =
     rawTsCache.computeIfAbsent((dir, v), _ =>
-      java.lang.Long.valueOf(readManifestFull(spark, dir, v).ts.getOrElse(
-        hadoopFs(spark, dir)
-          .getFileStatus(manifestPath(dir, v)).getModificationTime)))
+      java.lang.Long.valueOf(readManifestFull(spark, dir, v).ts))
 
   /** [[rawTs]] that treats a version vanished between the listing and
     * the read — a CONCURRENT VACUUM expiring history mid-fold — as
@@ -2831,14 +2687,16 @@ object MergeTable {
       tsMillis: Long): DataFrame =
     readTable(spark, dir, Some(versionAsOf(spark, dir, tsMillis)))
 
+  /** The manifest-only version ledger behind `merge_table_history`.
+    * `rows` is the sum of the listed buckets' fingerprint row counts;
+    * it is never null (the column stays nullable). */
   def history(spark: SparkSession, dir: String): DataFrame = {
     val times = commitTimes(spark, dir).toMap
     val rows = versions(spark, dir).sorted.map { v =>
       val md = readManifestFull(spark, dir, v)
       val buckets = md.entries.map(bucketOfEntry).distinct
-      val attested = fpTotal(md.fps, buckets.toSet)
       (v, md.entries.size.toLong, buckets.size.toLong,
-        attested.map(fpRows),
+        Option(buckets.map(b => fpRows(md.fps(b))).sum),
         new java.sql.Timestamp(times(v)))
     }
     import spark.implicits._
@@ -2847,9 +2705,8 @@ object MergeTable {
 
   /** Builder for `merge_table_detail(dir)`: the one-row DESCRIBE
     * DETAIL idiom — key column, live version, bucket width, live
-    * files/buckets, manifest-attested row count (null where any
-    * bucket is unattested), retained versions, tags, constraints —
-    * all from metadata, zero data reads. */
+    * files/buckets, manifest-attested row count, retained versions,
+    * tags, constraints — all from metadata, zero data reads. */
   private[graft] val detailFunctionBuilder
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -2861,14 +2718,15 @@ object MergeTable {
       detail(spark, dir).queryExecution.logical
   }
 
-  /** The metadata-only table detail behind `merge_table_detail`. */
+  /** The metadata-only table detail behind `merge_table_detail`;
+    * `rows` is the head's fingerprint row total, never null (the
+    * column stays nullable). */
   def detail(spark: SparkSession, dir: String): DataFrame = {
     val vs = versions(spark, dir)
     val cur = vs.lastOption.getOrElse(
       throw new IllegalArgumentException(s"no MergeTable at $dir"))
     val md = readManifestFull(spark, dir, cur)
     val buckets = md.entries.map(bucketOfEntry).distinct
-    val attested = fpTotal(md.fps, buckets.toSet)
     import spark.implicits._
     // bloom COVERAGE (files_with_bloom vs files) makes equality-
     // skipping health observable: blooms are advisory, so a coverage
@@ -2884,7 +2742,7 @@ object MergeTable {
         s"${a.action}:${a.buckets.size} bucket(s)").mkString("; ")
     Seq((keyMeta(spark, dir, None), cur, md.hexDigits.toLong,
       md.entries.size.toLong, buckets.size.toLong,
-      attested.map(fpRows), vs.size.toLong,
+      Option(buckets.map(b => fpRows(md.fps(b))).sum), vs.size.toLong,
       tags(spark, dir).size.toLong,
       constraints(spark, dir).size.toLong,
       md.dvs.size.toLong, md.dvf.values.sum,
@@ -3048,14 +2906,9 @@ object MergeTable {
       //   matched = existingLive + |batch| - |merged epoch rows|
       // with |merged epoch rows| read off the commit's own read-back
       // fingerprints. That removes a full semi-join pass over the
-      // impacted buckets per upsert. A legacy bucket carrying no
-      // fingerprint falls back to the counted path.
-      val rewrittenBuckets = rewritten.map(bucketOfEntry).distinct
-      val attested = rewrittenBuckets.forall(man.fps.contains)
-      val matchedCounted =
-        if (attested) -1L
-        else existing.join(batch.select(key), Seq(key), "left_semi")
-          .count()
+      // impacted buckets per upsert.
+      val existingLive = rewritten.map(bucketOfEntry).distinct
+        .map(b => fpRows(man.fps(b))).sum
       // SCHEMA EVOLUTION, extend-only: the batch may ADD columns (old
       // rows read null for them via mergeSchema) but must carry every
       // column the impacted files physically store — a batch silently
@@ -3091,11 +2944,7 @@ object MergeTable {
         keptSts = man.sts.view.filterKeys(kept.toSet).toMap,
         cols = man.cols, keptDvs = man.dvs, keptDvf = man.dvf,
         props = man.props, keptBls = man.bls, keptEschs = man.eschs)
-      val matched =
-        if (attested)
-          rewrittenBuckets.map(b => fpRows(Map(b -> man.fps(b)))).sum +
-            nBatch - ec.freshRows
-        else matchedCounted
+      val matched = existingLive + nBatch - ec.freshRows
       CowStats(ec.version, impacted.size.toLong, rewritten.size.toLong,
         ec.fresh.size.toLong, matched, nBatch - matched)
     }
@@ -3130,11 +2979,8 @@ object MergeTable {
     // discipline): matched = existingLive - |survivor epoch rows|;
     // and no materialization pass on the survivors — the epoch write
     // is their only consumer (r18, guide §1.2)
-    val rewrittenBuckets = rewritten.map(bucketOfEntry).distinct
-    val attested = rewrittenBuckets.forall(man.fps.contains)
-    val matchedCounted =
-      if (attested) -1L
-      else existing.join(ks.select(key), Seq(key), "left_semi").count()
+    val existingLive = rewritten.map(bucketOfEntry).distinct
+      .map(b => fpRows(man.fps(b))).sum
     val survivors = existing.join(ks.select(key), Seq(key), "left_anti")
     val next = cur + 1
     val ec = commitEpoch(spark, dir, next, survivors, kept,
@@ -3143,13 +2989,8 @@ object MergeTable {
       keptSts = man.sts.view.filterKeys(kept.toSet).toMap,
       cols = man.cols, keptDvs = man.dvs, keptDvf = man.dvf,
       props = man.props, keptBls = man.bls, keptEschs = man.eschs)
-    val matched =
-      if (attested)
-        rewrittenBuckets.map(b => fpRows(Map(b -> man.fps(b)))).sum -
-          ec.freshRows
-      else matchedCounted
     CowStats(ec.version, impacted.size.toLong, rewritten.size.toLong,
-      ec.fresh.size.toLong, matched, 0L)
+      ec.fresh.size.toLong, existingLive - ec.freshRows, 0L)
   }
 
   final case class MorDeleteStats(version: Long, rowsDeleted: Long,
@@ -3174,11 +3015,7 @@ object MergeTable {
     * the survivors' fingerprint bit-for-bit — [[fsckDeep]] re-attests
     * it, [[changes]] prunes by it, and a later rewrite's read-back
     * fingerprint lands on the same value, which is why compaction
-    * stays CDC-free even while purging tombstones. A legacy bucket
-    * carrying NO fingerprint refuses the MOR path loudly (its CDC
-    * fallback is file-list identity, which a tombstone-only commit
-    * does not change — silence would hide the deletes from the
-    * changefeed); use [[deleteKeys]] there.
+    * stays CDC-free even while purging tombstones.
     *
     * Rows stay readable at PRIOR versions until [[vacuum]] — same
     * retention contract as every writer here. Deleting a key twice is
@@ -3254,16 +3091,15 @@ object MergeTable {
     perFile: Map[String, Long], fpDelta: Map[String, String],
     newDvs: Seq[String], dvName: String)
 
-  /** Component-wise fp arithmetic over the `rows:h1[:h2]` wire shape:
+  /** Component-wise fp arithmetic over the `rows:h1:h2` wire shape:
     * the hash channels are SUMS, so content deltas add and subtract
-    * exactly. Width = the narrower side (a legacy two-component
-    * attestation keeps its two — [[fpAgrees]]' prefix semantics). */
-  private def fpCombine(a: String, b: String, sign: Int): String = {
-    val as = a.split(":"); val bs = b.split(":")
-    (0 until math.min(as.length, bs.length))
-      .map(i => (BigInt(as(i)) + sign * BigInt(bs(i))).toString)
-      .mkString(":")
-  }
+    * exactly. */
+  private def fpCombine(a: String, b: String, sign: Int): String =
+    a.split(":").zip(b.split(":"))
+      .map { case (x, y) => BigInt(x) + sign * BigInt(y) }.mkString(":")
+
+  /** The fingerprint of zero rows. */
+  private val FpZero = "0:0:0"
 
   private def morTombstonePlan(spark: SparkSession, dir: String,
       cur: Long, man: ManifestData, candidates: Seq[String],
@@ -3299,15 +3135,6 @@ object MergeTable {
         sum("fp_h2").as("h2"))
       .collect()
     if (agg.isEmpty) return None
-    val unattested = agg.map(_.getString(0)).distinct
-      .filterNot(man.fps.contains)
-    require(unattested.isEmpty,
-      "deletion vectors need per-bucket fingerprints, but bucket(s) " +
-        s"${unattested.sorted.mkString(", ")} carry none (legacy " +
-        "writer) — their CDC fallback is file-list identity, which a " +
-        "tombstone-only commit does not change, so the changefeed " +
-        "would silently miss these deletes; use deleteKeys " +
-        "(copy-on-write) or optimize the table first")
     val nTomb = agg.map(_.getLong(2)).sum
     val fpDelta = agg.groupBy(_.getString(0)).map { case (b, rs) =>
       val dn = rs.map(_.getLong(2)).sum
@@ -3839,9 +3666,8 @@ object MergeTable {
     * per-app txn-version model), so any vacuum retaining ≥ 1 version
     * retains every stream's frontier even when upserts, optimizes, or
     * restores interleave between a stream's merges; the head manifest
-    * alone answers this. (Manifests from before the carry-forward may
-    * hold a token only on the committing version — the newest-first
-    * scan below covers that legacy shape.) */
+    * alone answers this; the newest-first walk reads past the head
+    * only for a stream that never committed. */
   def lastAppliedBatch(spark: SparkSession, dir: String,
       streamId: String): Option[Long] =
     versions(spark, dir).reverse.iterator
@@ -4080,7 +3906,8 @@ object MergeTable {
         .withColumn("bucket", bucketCol(col(key), newHexDigits))
       val ec = commitEpoch(spark, dir, next, rehashed, Seq.empty,
         newHexDigits, () => (), tokens = man.tokens, cols = man.cols,
-        props = man.props)  // bls rebuild with the rewrite (all fresh)
+        props = man.props,  // bls rebuild with the rewrite (all fresh)
+        keptEschs = man.eschs) // an emptied table keeps its schema
       CowStats(ec.version, ec.fresh.size.toLong,
         man.entries.size.toLong, ec.fresh.size.toLong, 0L, 0L)
     }
@@ -4124,12 +3951,6 @@ object MergeTable {
     * window straddling it prunes every compacted bucket unread. A
     * bucket whose every row was tombstoned attests as the all-zero
     * fingerprint, writes no file, and drops out of the manifest.
-    * A legacy UNATTESTED bucket (no `#fp=` line — the state
-    * [[fsckDeep]] reports as unattested, not corrupt) has nothing to
-    * re-attest: it is rewritten and its read-back fingerprint is
-    * COMMITTED, attesting it going forward — honestly visible to the
-    * changefeed as changed rather than laundered into the CDC-free
-    * claim, and never misdiagnosed as corruption.
     * Tombstone files stop being referenced once no annotated data
     * file remains; [[vacuum]] reclaims them like any other
     * unreferenced file. */
@@ -4199,34 +4020,18 @@ object MergeTable {
               Map.empty[String, String])
           else epochAnnotations(spark, dir, epochName,
             widesOf(man.props), man.props)
-        // the attestation gate: read-back == manifest, per bucket —
-        // for ATTESTED buckets only; an unattested (legacy, no #fp=)
-        // bucket has no claim to check and gains one from the rewrite
-        val unattested = target.filterNot(man.fps.contains)
+        // the attestation gate: read-back == manifest, per bucket
         val drifted = freshFps.collect {
-          case (b, fp) if man.fps.get(b).exists(!fpAgrees(_, fp)) => b
+          case (b, fp) if man.fps(b) != fp => b
         }
-        val vanished = (target -- freshFps.keySet).filter(b =>
-          man.fps.get(b).exists(!_.split(":").forall(c => BigInt(c) == 0)))
-        // an UNATTESTED bucket that vanishes in the fold is
-        // undecidable: with no fingerprint there is no way to prove
-        // its every row was tombstoned rather than lost — refuse
-        // loudly rather than silently drop its entries
-        val vanishedBlind = (target -- freshFps.keySet)
-          .filterNot(man.fps.contains)
-        if (drifted.nonEmpty || vanished.nonEmpty ||
-            vanishedBlind.nonEmpty) {
+        val vanished = (target -- freshFps.keySet)
+          .filter(b => man.fps(b) != FpZero)
+        if (drifted.nonEmpty || vanished.nonEmpty) {
           fs.delete(new Path(s"$dir/data/$epochName"), true)
           throw new IllegalStateException(
             s"compactDvs at $dir: rewritten bucket(s) " +
-              (drifted ++ vanished ++ vanishedBlind).toSeq.sorted
-                .mkString(", ") +
+              (drifted ++ vanished).toSeq.sorted.mkString(", ") +
               " do not re-attest their manifest fingerprints" +
-              (if (vanishedBlind.nonEmpty)
-                 s" (${vanishedBlind.toSeq.sorted.mkString(", ")}: " +
-                   "unattested AND fully tombstoned — cannot prove " +
-                   "the tombstones covered every row)"
-               else "") +
               " — the table is corrupt (run fsckDeep); nothing was " +
               "committed")
         }
@@ -4256,9 +4061,7 @@ object MergeTable {
           }
         try {
           commitManifest(spark, dir, next, kept ++ fresh,
-            man.hexDigits,
-            (man.fps -- (target -- freshFps.keySet)) ++
-              freshFps.view.filterKeys(unattested).toMap,
+            man.hexDigits, man.fps -- (target -- freshFps.keySet),
             tokens = man.tokens,
             sts = man.sts.view.filterKeys(kept.toSet).toMap ++ freshSts,
             cols = man.cols, dvs = keepDvs, dvf = man.dvf,
@@ -4318,9 +4121,8 @@ object MergeTable {
     // 1) tombstone ratio -> fold the dirty buckets
     val tomb = man.dvf.values.sum
     if (tomb > 0) {
-      val rows = fpTotal(man.fps, byBucket.keySet).map(fpRows)
-      val ratio = rows.filter(_ > 0)
-        .map(r => tomb.toDouble / r).getOrElse(1.0)
+      val rows = byBucket.keys.map(b => fpRows(man.fps(b))).sum
+      val ratio = if (rows > 0) tomb.toDouble / rows else 1.0
       val thr = prop("graft.maintenance.maxDvRatio", 0.10)
       if (ratio > thr)
         out += MaintenanceAdvice("compact_dvs",
@@ -4456,15 +4258,10 @@ object MergeTable {
     // 1) expired manifests + stale commit temps (metadata only)
     drop.foreach(v => fs.delete(manifestPath(dir, v), false))
     // the metadata caches ride manifest immutability; expired
-    // versions' entries (and legacy epochs no retained manifest
-    // lists) would otherwise accumulate forever in a long-lived
-    // driver that vacuums periodically
+    // versions' entries would otherwise accumulate forever in a
+    // long-lived driver that vacuums periodically
     drop.foreach(v => rawTsCache.remove((dir, v)))
     drop.foreach(v => manifestCache.remove((dir, v)))
-    val keptEpochs = keptMans
-      .flatMap(_.entries.map(e => e.take(e.indexOf('/')))).toSet
-    epochProbeCache.removeIf(k =>
-      k._1 == dir && !keptEpochs.contains(k._2))
     // stats checkpoints union facts across ALL versions ever seen;
     // once manifests expire, drop the checkpoints too so the next
     // stats read rebuilds from the retained manifests only (the
@@ -4556,11 +4353,11 @@ object MergeTable {
     * publish window pays that. */
   /** Buckets whose CONTENT differs between two versions — the set a
     * version diff must scan; every other bucket is skipped unread.
-    * Compared by manifest fingerprint where both versions carry one
-    * (current writer), falling back per bucket to file-list identity
-    * for legacy manifests (conservative: a legacy layout-only rewrite
-    * scans, never skips, a changed bucket). When the two versions
-    * disagree on bucket WIDTH (the window straddles a [[rebucket]]),
+    * Compared by manifest fingerprint (a bucket listed on one side
+    * only is changed), except across a TYPE-WIDENING declaration,
+    * where file-list plus tombstone identity stands in (see below).
+    * When the two versions disagree on bucket WIDTH (the window
+    * straddles a [[rebucket]]),
     * per-bucket identity is meaningless — instead the TABLE-LEVEL
     * fingerprint totals are compared (sums are associative: the total
     * is the same number whichever width grouped it), and a match
@@ -4578,9 +4375,7 @@ object MergeTable {
     val bf = byB(mf.entries)
     val bt = byB(mt.entries)
     if (mf.hexDigits != mt.hexDigits &&
-        (for (a <- fpTotal(mf.fps, bf.keySet);
-              b <- fpTotal(mt.fps, bt.keySet)) yield fpAgrees(a, b))
-          .contains(true))
+        fpTotal(mf.fps, bf.keys) == fpTotal(mt.fps, bt.keys))
       return Seq.empty
     // a window straddling a TYPE-WIDENING declaration crosses a hash
     // regime (fingerprints canonicalize to the declared types, which
@@ -4594,34 +4389,23 @@ object MergeTable {
     def dvfB(m: ManifestData, b: String): Map[String, Long] =
       m.dvf.filter(e => bucketOfEntry(e._1) == b)
     (bf.keySet ++ bt.keySet).filter { b =>
-      (mf.fps.get(b), mt.fps.get(b)) match {
-        case (Some(a), Some(c)) if !regimeCrossed => !fpAgrees(a, c)
-        case _ => bf.get(b) != bt.get(b) || dvfB(mf, b) != dvfB(mt, b)
-      }
+      if (regimeCrossed)
+        bf.get(b) != bt.get(b) || dvfB(mf, b) != dvfB(mt, b)
+      else !bf.contains(b) || !bt.contains(b) || mf.fps(b) != mt.fps(b)
     }.toSeq.sorted
   }
 
-  /** Table-level fingerprint total, rendered in the same
-    * `rows:h1[:h2]` shape the per-bucket fingerprints use (so
-    * [[fpAgrees]]' prefix comparison applies): component-wise sums
-    * over every bucket's fingerprint — the second channel is present
-    * only when EVERY bucket carries it (a mixed-format history sums
-    * what both formats share). None unless every bucket holding files
-    * carries a fingerprint at all (a legacy bucket with none makes the
-    * total unattestable, so the caller must not prune on it). */
+  /** Table-level fingerprint total over `buckets`, in the same
+    * `rows:h1:h2` shape the per-bucket fingerprints use:
+    * component-wise sums (the manifest read guarantees every listed
+    * bucket carries one). */
   private def fpTotal(fps: Map[String, String],
-      buckets: Set[String]): Option[String] =
-    if (!buckets.subsetOf(fps.keySet)) None
-    else {
-      val parts = buckets.toSeq.map(b => fps(b).split(":").map(BigInt(_)))
-      val width = if (parts.isEmpty) 3 else parts.map(_.length).min
-      val sums = (0 until width).map(i => parts.map(_(i)).sum)
-      Some(sums.mkString(":"))
-    }
+      buckets: Iterable[String]): String =
+    buckets.foldLeft(FpZero)((acc, b) => fpCombine(acc, fps(b), 1))
 
-  /** Σ rows component of a rendered [[fpTotal]]. */
-  private def fpRows(total: String): Long =
-    total.split(":")(0).toLong
+  /** Rows component of one `rows:h1:h2` fingerprint. */
+  private def fpRows(fp: String): Long =
+    fp.substring(0, fp.indexOf(':')).toLong
 
   def changes(spark: SparkSession, dir: String, fromV: Long,
       toV: Long): DataFrame = {
@@ -4680,21 +4464,22 @@ object MergeTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
     // a side with no changed files (every changed bucket born after
-    // fromV, or dropped by toV) reads the OTHER side's files for its
-    // schema and contributes zero rows. Each side applies ITS OWN
-    // version's tombstones (a merge-on-read delete changes the same
-    // files' logical rows, so the diff must read each endpoint's DV
-    // state — a DV-only window then classifies the masked rows as
-    // deletes through the ordinary full-outer diff).
-    def side0(m: ManifestData, es: Seq[String],
-        other: Seq[String]): DataFrame = {
+    // fromV, or dropped by toV) reads the OTHER side's files — under
+    // the other side's epoch schemas — for its schema and contributes
+    // zero rows. Each side applies ITS OWN version's tombstones (a
+    // merge-on-read delete changes the same files' logical rows, so
+    // the diff must read each endpoint's DV state — a DV-only window
+    // then classifies the masked rows as deletes through the ordinary
+    // full-outer diff).
+    def side0(m: ManifestData, es: Seq[String], other: ManifestData,
+        os: Seq[String]): DataFrame = {
       val d = applyLogicalView(
-        readEntries(spark, dir, m, if (es.nonEmpty) es else other)
-          .drop("bucket"), viewCols)
+        readEntries(spark, dir, m.copy(eschs = other.eschs ++ m.eschs),
+          if (es.nonEmpty) es else os).drop("bucket"), viewCols)
       if (es.nonEmpty) d else d.limit(0)
     }
-    val tFrom = side0(manFrom, ff, tf)
-    val tTo = side0(manTo, tf, ff)
+    val tFrom = side0(manFrom, ff, manTo, tf)
+    val tTo = side0(manTo, tf, manFrom, ff)
     // align both sides on the UNION of their columns (a diff may
     // straddle a schema evolution; the older side reads null for the
     // newer columns, so an evolved value registers as an update)
@@ -5661,7 +5446,7 @@ object MergeTable {
       val cdcDel = changes(s, out, 2L, 4L)
         .filter(col("change") === "delete").count()
       val deep = fsckDeep(s, out)
-      require(deep.mismatched.isEmpty && deep.unattested.isEmpty,
+      require(deep.mismatched.isEmpty,
         s"q176: decremented fingerprints must re-attest: $deep")
       optimize(s, out, "cents") // materializes; tombstones purge
       val detAfter = detail(s, out).collect().head
@@ -5820,7 +5605,7 @@ object MergeTable {
         st2.filesAppended <= st2.bucketsTouched,
         "q178: the append epoch writes at most one file per bucket")
       val deep = fsckDeep(s, out)
-      require(deep.mismatched.isEmpty && deep.unattested.isEmpty,
+      require(deep.mismatched.isEmpty,
         s"q178: mixed-epoch fingerprints must re-attest: $deep")
       lifecycleState(s, out)
     },
@@ -6018,11 +5803,12 @@ object MergeTable {
     * recompute agrees with the attestations across the entire
     * maintenance surface: full lifecycle (create + two upserts) →
     * [[rebucket]] to one hex digit → [[optimize]] → [[fsckDeep]].
-    * Every live bucket must be attested (unattested = 0) and every
-    * recomputed (rows, hash-sum) must equal what the commits wrote
-    * (mismatches = 0) — a fingerprint-INHERITANCE bug anywhere in
-    * upsert/rebucket/optimize, or a write that lied about what
-    * reached disk, fails the gate; buckets_checked is re-derived by
+    * Every live bucket is attested (the manifest read refuses one
+    * that is not, so `unattested` is the constant 0 the oracle
+    * expects) and every recomputed (rows, hash-sum) must equal what
+    * the commits wrote (mismatches = 0) — a fingerprint-INHERITANCE
+    * bug anywhere in upsert/rebucket/optimize, or a write that lied
+    * about what reached disk, fails the gate; buckets_checked is re-derived by
     * the oracle as the distinct bucket count at the migrated width,
     * so the audit can't pass by checking nothing. The full final
     * state rides along (the q150 discipline). Corruption DETECTION —
@@ -6038,7 +5824,7 @@ object MergeTable {
         .withColumn("buckets_checked", lit(rep.bucketsChecked))
         .withColumn("content_mismatches",
           lit(rep.mismatched.size.toLong))
-        .withColumn("unattested", lit(rep.unattested.size.toLong))
+        .withColumn("unattested", lit(0L))
     },
     s"""WITH $lifecycleFinCte
        |SELECT key, cust, status, cents,
@@ -6318,7 +6104,7 @@ object MergeTable {
       require(baseFiles.subsetOf(readManifest(s, root, 2L).toSet),
         "q180: a MOR merge must never rewrite a base file")
       val deep = fsckDeep(s, root)
-      require(deep.mismatched.isEmpty && deep.unattested.isEmpty,
+      require(deep.mismatched.isEmpty,
         s"q180: merged fingerprints must re-attest: $deep")
       readTable(s, root)
         .select("key", "cents", "status", "note")
@@ -6860,8 +6646,7 @@ object MergeTable {
     *  - CDC-FREE: [[changedBuckets]] across the compaction commit is
     *    EMPTY (the read-back fingerprints re-attested the manifest's,
     *    so a changefeed window straddling compaction prunes every
-    *    bucket unread — cheaper than OPTIMIZE, which is merely
-    *    row-free, not scan-free, across legacy buckets);
+    *    bucket unread);
     *  - tombstones and DV files drop to ZERO and [[fsckDeep]] is
     *    clean;
     *  - the file arithmetic is oracle-pinned: files_before = the
@@ -6905,7 +6690,7 @@ object MergeTable {
       require(perBucket == Set(1),
         s"q182: every bucket must fold to one file, got $perBucket")
       val deep = fsckDeep(s, out)
-      require(deep.mismatched.isEmpty && deep.unattested.isEmpty,
+      require(deep.mismatched.isEmpty,
         s"q182: compacted fingerprints must re-attest: $deep")
       lifecycleState(s, out)
         .withColumn("files_before", lit(row.getLong(2)))
@@ -7203,7 +6988,7 @@ object MergeTable {
       require(det.getAs[Long]("dv_tombstones") == 0L,
         "q185: compaction must purge every tombstone annotation")
       val deep = fsckDeep(s, out)
-      require(deep.mismatched.isEmpty && deep.unattested.isEmpty,
+      require(deep.mismatched.isEmpty,
         s"q185: reconstructed fingerprints must re-attest: $deep")
       val filesTotal = readManifest(s, out, versions(s, out).last)
         .size.toLong

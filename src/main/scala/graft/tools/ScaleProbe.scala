@@ -390,70 +390,6 @@ object ScaleProbe {
         expo(c => c.statsScanned.toDouble / c.statsTotal)}%.2f " +
       f"stats_plan_time=${expo(_.statsPlanS)}%.2f")
 
-    // --- WRITE-PATH OVERHEAD A/B (round 15): bare upsert on a
-    // 256-bucket table, the round-14/15 manifest annotations
-    // (file-grain stats + fp2 channel) ON vs OFF (the probe flag
-    // emulates the r13 commit shape), at 1x/3x/10x. The question the
-    // verdict asked: what fraction of a commit does the read-back
-    // annotation work cost, and does the fraction grow with table
-    // size? (It should not: the read-back scans only the REWRITTEN
-    // epoch, whose size is batch-bucket-bound, not table-bound.)
-    // Two schema shapes, A/B'd independently: the original INTEGRAL
-    // probe (key, payload) and a TYPED-STATS-HEAVY one (two padded
-    // strings through the truncation/increment path, a decimal, a
-    // date) — round 15's write-path regression suspects (q161/q156/
-    // q162) pay the string/date/decimal bound aggregation this shape
-    // exercises and the integral shape does not.
-    case class AbCell(scale: Int, n: Long, onS: Double, offS: Double)
-    def abLeg(tag: String, widen: DataFrame => DataFrame)
-        : Seq[AbCell] = {
-      val cells = scales.map { sc =>
-        val n = baseN * 10 * sc // big enough that a commit has real work
-        def mkTbl(t: String): String = {
-          val d = s"$tmp/ab_${tag}_${t}_s$sc"
-          graft.ext.MergeTable.create(
-            widen(spark.range(n).select(col("id").as("key"),
-              (col("id") % 97).as("payload"))), d, "key", 2)
-          d
-        }
-        val batch = widen(spark.range(40).select(
-          (col("id") * (n / 40)).as("key"), lit(-1L).as("payload")))
-          .localCheckpoint(true)
-        val tOn = mkTbl("on"); val tOff = mkTbl("off")
-        val onS = timeMinOf(2) {
-          graft.ext.MergeTable.upsert(spark, tOn, batch): Unit
-        }
-        System.setProperty("graft.cow.probe.bareFingerprints", "true")
-        val offS =
-          try timeMinOf(2) {
-            graft.ext.MergeTable.upsert(spark, tOff, batch): Unit
-          }
-          finally System.clearProperty("graft.cow.probe.bareFingerprints")
-        println(f"[scaleprobe] ab[$tag] scale=${sc}x n=$n " +
-          f"upsert_full=${onS}%.3fs upsert_bare=${offS}%.3fs " +
-          f"overhead_frac=${(onS - offS) / onS}%.3f")
-        AbCell(sc, n, onS, offS)
-      }
-      def abexpo(m: AbCell => Double): Double = {
-        val (a, b) = (cells.head, cells.last)
-        math.log(m(b) / m(a)) / math.log(b.n.toDouble / a.n)
-      }
-      println(f"[scaleprobe] AB[$tag] EXPONENTS (1x -> ${scales.last}x): " +
-        f"upsert_full_time=${abexpo(_.onS)}%.2f " +
-        f"upsert_bare_time=${abexpo(_.offS)}%.2f " +
-        f"overhead_frac_trend=${abexpo(c => math.max(1e-9, (c.onS - c.offS) / c.onS))}%.2f")
-      cells
-    }
-    abLeg("integral", identity)
-    abLeg("typed", df => df
-      .withColumn("tag", concat(lit("pri-"),
-        lpad((col("key") % 5).cast("string"), 20, "x")))
-      .withColumn("note", concat(lit("doc body prefix "),
-        col("key").cast("string")))
-      .withColumn("price", (col("key") % 99991).cast("decimal(12,2)"))
-      .withColumn("odate", date_add(lit(java.sql.Date.valueOf(
-        "2020-01-01")), (col("key") % 1461).cast("int"))))
-
     // --- MOR vs COW WRITE-AMPLIFICATION LEG: a fixed 40-key batch
     // against buckets that GROW with scale (16 buckets, n rows). The
     // copy-on-write upsert rewrites every impacted bucket (write

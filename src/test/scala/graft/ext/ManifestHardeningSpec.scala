@@ -3,10 +3,10 @@ package graft.ext
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-15 manifest-reader hardening: the universal reader must
-  * tolerate foreign/legacy token lines, and the per-file stats key
-  * must be path-shape-independent (a table dir containing "/data/"
-  * must not silently disable stats pruning). */
+/** Manifest-reader hardening: the reader tolerates foreign token
+  * lines, refuses a manifest missing a required line, and the
+  * per-file stats key is path-shape-independent (a table dir
+  * containing "/data/" must not silently disable stats pruning). */
 class ManifestHardeningSpec extends SparkSpec {
 
   test("a free-form #tok= line (no ':<long>' suffix) is skipped by the " +
@@ -156,44 +156,47 @@ class ManifestHardeningSpec extends SparkSpec {
         s"$scanned of $total files planned")
     assert(q.count() === (100 to 200).size.toLong)
   }
-  test("a manifest stripped of #esch= lines (legacy writer) reads " +
-      "through the footer-merge probe with identical rows, schema, " +
-      "column order, and point-lookup pruning") {
+  test("a manifest missing its #format= line, a bucket's #fp= line, " +
+      "or a live epoch's #esch= line is refused by readTable, fsckDeep " +
+      "and changes with the named error — never read as rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-esch")
+    val dir = java.nio.file.Files.createTempDirectory("graft-refuse")
       .resolve("t").toString
     MergeTable.create(
-      (1 to 120).map(i => (i.toLong, s"v$i", i.toLong * 3))
-        .toDF("key", "value", "cents"), dir, "key", 1)
-    // evolution epoch: batch EXTENDS the schema, so the snapshot
-    // spans two epochs with different file schemas
+      (1 to 120).map(i => (i.toLong, s"v$i")).toDF("key", "value"),
+      dir, "key", 1)
     MergeTable.upsert(spark, dir,
-      Seq((1L, "x", 5L, "extra")).toDF("key", "value", "cents", "note"))
-    val withEsch = MergeTable.readTable(spark, dir)
-    val schemaE = withEsch.schema
-    val rowsE = withEsch.orderBy("key").collect().toSeq
-    // strip the persisted epoch schemas from the head manifest — the
-    // shape a pre-round-17 writer leaves behind
-    val man = java.nio.file.Paths.get(dir, "_manifests", "v000000002")
-    val lines = java.nio.file.Files.readAllLines(man)
-    assert(lines.stream().anyMatch(_.startsWith("#esch=")),
-      "fixture: the current writer must persist epoch schemas")
-    val stripped = new java.util.ArrayList[String]()
-    lines.forEach(l => if (!l.startsWith("#esch=")) stripped.add(l): Unit)
-    java.nio.file.Files.write(man, stripped)
-    val legacy = MergeTable.readTable(spark, dir)
-    assert(legacy.schema === schemaE,
-      "the probe fallback must resolve the identical schema " +
-        "(types, order, nullability, field metadata)")
-    assert(legacy.orderBy("key").collect().toSeq === rowsE)
-    // pruning still fires on the probe path (footer metadata intact)
-    graft.plans.KeyToBucketPruning.enable(spark)
-    val scans = legacy.filter(col("key") === 17L)
-      .queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.totalNumberOfFiles
-      }.get
-    assert(scans < MergeTable.readTable(spark, dir).inputFiles.length,
-      "the legacy probe path must still prune point lookups")
+      Seq((1L, "x", "extra")).toDF("key", "value", "note"))
+    // one damaged copy of the table per required line kind: the head
+    // manifest loses the first line starting with `tag`
+    def damagedCopy(tag: String): String = {
+      val src = java.nio.file.Paths.get(dir)
+      val dst = java.nio.file.Files.createTempDirectory("graft-damaged")
+        .resolve("t")
+      val walk = java.nio.file.Files.walk(src)
+      try walk.forEach { p =>
+        java.nio.file.Files.copy(p, dst.resolve(src.relativize(p))): Unit
+      } finally walk.close()
+      val man = dst.resolve("_manifests").resolve("v000000002")
+      val lines = java.nio.file.Files.readAllLines(man)
+      val drop = lines.indexOf(
+        lines.stream().filter(_.startsWith(tag)).findFirst().get)
+      lines.remove(drop)
+      java.nio.file.Files.write(man, lines)
+      dst.toString
+    }
+    Seq("#format=", "#fp=", "#esch=").foreach { tag =>
+      val d = damagedCopy(tag)
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[MergeTable.UnreadableManifestException](f)
+        assert(e.getMessage.contains(tag.dropRight(1)),
+          s"$what on a copy without $tag: ${e.getMessage}")
+      }
+      refused("readTable")(MergeTable.readTable(spark, d).collect())
+      refused("fsckDeep")(MergeTable.fsckDeep(spark, d))
+      refused("changes")(MergeTable.changes(spark, d, 1L, 2L).collect())
+      // the undamaged predecessor still reads
+      assert(MergeTable.readTable(spark, d, Some(1L)).count() === 120L)
+    }
   }
 }

@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   * touches absent keys; empty-bucket transitions; latest-wins across
   * arbitrarily many versions; an upsert landing AFTER a mid-history
   * bucket-width migration (the batch must hash at the new width);
-  * time travel crossing migration and optimize boundaries. Kept to
+  * time travel crossing migration and optimize boundaries; deletes
+  * and merges that empty the table. After every op [[MergeTable
+  * .fsckDeep]] must check every live bucket of the new version and
+  * find no mismatch — every writer emits a complete manifest. Kept to
   * few-but-meaty cases because every operation pays real file I/O. */
 object MergeTableProperties extends Properties("MergeTable") {
 
@@ -37,24 +40,18 @@ object MergeTableProperties extends Properties("MergeTable") {
 
   // small key domain on purpose: collisions (update/delete/re-insert
   // of the SAME key across batches) are the interesting interactions
-  // upserts may touch key 1; deletes never do: a table whose every
-  // row died has an EMPTY manifest and no schema to read — a
-  // documented edge the sweep must not trip on incidentally
   private val genUpsert: Gen[Op] = for {
     keys <- Gen.nonEmptyListOf(Gen.choose(1L, 12L)).map(_.toSet)
     tag <- Gen.choose(0, 1000)
   } yield Upsert(keys.map(k => k -> s"v$tag-$k").toMap)
-  // merge sources draw keys from 2..12 only: a matched-Delete clause
-  // must never be able to empty the table (key 1 survives every op —
-  // the empty-manifest edge stays a deliberate spec, not a sweep trip)
   private val genMerge: Gen[Op] = for {
-    keys <- Gen.nonEmptyListOf(Gen.choose(2L, 12L)).map(_.toSet)
+    keys <- Gen.nonEmptyListOf(Gen.choose(1L, 12L)).map(_.toSet)
     tag <- Gen.choose(0, 1000)
     kind <- Gen.choose(0, 3)
   } yield Merge(keys.map(k => k -> s"m$tag-$k").toMap, kind)
   private val genOp: Gen[Op] = Gen.frequency(
     4 -> genUpsert,
-    2 -> Gen.nonEmptyListOf(Gen.choose(2L, 12L)).map(ks =>
+    2 -> Gen.nonEmptyListOf(Gen.choose(1L, 12L)).map(ks =>
       Delete(ks.toSet): Op),
     1 -> Gen.oneOf(1, 2, 3).map(h => Rebucket(h): Op),
     1 -> Gen.const(Optimize: Op),
@@ -84,7 +81,21 @@ object MergeTableProperties extends Properties("MergeTable") {
       val history = scala.collection.mutable.ArrayBuffer(model)
       val widthHist = scala.collection.mutable.ArrayBuffer(width)
       import MergeTable.{MergeWhen, MergeAction => A}
+      // the new version's fsckDeep checks every live bucket and finds
+      // no mismatch (the manifest read refuses a missing #fp=/#esch=)
+      def complete(): Boolean = {
+        val v = MergeTable.versions(s, dir).last
+        val rep = MergeTable.fsckDeep(s, dir, Some(v))
+        val live = MergeTable.readManifest(s, dir, v)
+          .map(e => "bucket=([0-9a-f]+)".r.findFirstMatchIn(e).get.group(1))
+          .distinct.size.toLong
+        rep.mismatched.isEmpty && rep.bucketsChecked == live
+      }
+      var allComplete = complete()
+      // (before, after) versions of every layout-only commit
+      val layoutPairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
       ops.foreach { op =>
+        val before = MergeTable.versions(s, dir).last
         op match {
           case Upsert(up) =>
             MergeTable.upsert(s, dir, up.toSeq.toDF("key", "value"))
@@ -139,8 +150,15 @@ object MergeTableProperties extends Properties("MergeTable") {
             model = history((target - 1).toInt)
             width = widthHist((target - 1).toInt)
         }
-        history += model
-        widthHist += width
+        // every op commits one version, except an OPTIMIZE of an
+        // emptied table, which has nothing to rewrite
+        if (op != Optimize || model.nonEmpty) {
+          history += model
+          widthHist += width
+          allComplete = allComplete && complete()
+          if (op == Optimize || op.isInstanceOf[Rebucket])
+            layoutPairs += before -> MergeTable.versions(s, dir).last
+        }
       }
       def stateAt(v: Long): Map[Long, String] =
         MergeTable.readTable(s, dir, Some(v))
@@ -156,13 +174,10 @@ object MergeTableProperties extends Properties("MergeTable") {
       // lands mid-history after deletes emptied buckets) must diff to
       // ZERO changed buckets: optimize by per-bucket fingerprint
       // identity, rebucket by the width-invariant table-level total
-      val layoutOnlyFree = versions.zip(versions.tail).zip(ops)
-        .forall { case ((a, b), op) => op match {
-          case Rebucket(_) | Optimize =>
-            MergeTable.changedBuckets(s, dir, a, b).isEmpty
-          case _ => true
-        } }
-      versions.size == history.size &&
+      val layoutOnlyFree = layoutPairs.forall { case (a, b) =>
+        MergeTable.changedBuckets(s, dir, a, b).isEmpty }
+      allComplete &&
+        versions.size == history.size &&
         widths == expectedWidths &&
         layoutOnlyFree &&
         versions.zip(history).forall { case (v, m) => stateAt(v) == m }

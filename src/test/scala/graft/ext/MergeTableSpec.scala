@@ -591,39 +591,9 @@ class MergeTableSpec extends SparkSpec {
     // equal even though BOTH endpoint manifests postdate maintenance
   }
 
-  test("legacy manifests without fingerprints fall back to file-list " +
-      "identity per bucket — conservative (maintenance scans), never " +
-      "wrong (quiet buckets still skip)") {
-    import spark.implicits._
-    val dir = mkTable(200)
-    MergeTable.upsert(spark, dir, Seq((7L, "UP")).toDF("key", "value"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // strip the #fp= lines from both manifests (a pre-fingerprint table)
-    Seq(1L, 2L).foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(
-        f"$dir/_manifests/v$v%09d")
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filterNot(_.startsWith("#fp=")).mkString("\n")
-        finally in.close()
-      fs.delete(p, false)
-      val o = fs.create(p, true)
-      try o.write(body.getBytes("UTF-8")) finally o.close()
-    }
-    val changed = MergeTable.changedBuckets(spark, dir, 1L, 2L)
-    assert(changed.size === 1,
-      "legacy file-list pruning must still skip every quiet bucket")
-    val cf = MergeTable.changes(spark, dir, 1L, 2L)
-      .select("key", "change").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(cf === Map(7L -> "update"))
-  }
-
   test("fsckDeep: a clean table re-attests across upsert + rebucket + " +
       "optimize; a corrupted live file is pinpointed to its bucket " +
-      "(invisible to the metadata fsck); stripped fingerprints report " +
-      "unattested, never verified") {
+      "(invisible to the metadata fsck)") {
     import spark.implicits._
     val dir = mkTable(200)
     MergeTable.upsert(spark, dir,
@@ -634,12 +604,11 @@ class MergeTableSpec extends SparkSpec {
     assert(clean.bucketsChecked > 0L)
     assert(clean.mismatched.isEmpty,
       s"clean table must re-attest: ${clean.mismatched}")
-    assert(clean.unattested.isEmpty)
     // time travel re-attests HISTORY: the pre-migration snapshot's
     // fingerprints were inherited across commits, and the recompute
     // over its own epoch files must still agree
     val v1 = MergeTable.fsckDeep(spark, dir, Some(1L))
-    assert(v1.mismatched.isEmpty && v1.unattested.isEmpty)
+    assert(v1.mismatched.isEmpty)
     // corrupt ONE live file in place: same path, same schema, same
     // row count, one payload value altered — the metadata fsck (a
     // name walk) stays clean, the content audit must pinpoint it
@@ -676,55 +645,6 @@ class MergeTableSpec extends SparkSpec {
     val deep = MergeTable.fsckDeep(spark, dir)
     assert(deep.mismatched === Seq(bucket),
       s"corruption in bucket $bucket mislocated: ${deep.mismatched}")
-    // stripped fingerprints (legacy writer): content can't be
-    // verified and the report says so instead of pretending
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = MergeTable.versions(spark, dir).last
-    val p = new org.apache.hadoop.fs.Path(f"$dir/_manifests/v$cur%09d")
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filterNot(_.startsWith("#fp=")).mkString("\n")
-      finally in.close()
-    fs.delete(p, false)
-    val o = fs.create(p, true)
-    try o.write(body.getBytes("UTF-8")) finally o.close()
-    val legacy = MergeTable.fsckDeep(spark, dir)
-    assert(legacy.bucketsChecked === 0L && legacy.mismatched.isEmpty &&
-      legacy.unattested.nonEmpty)
-  }
-
-  test("a zero-length manifest BELOW the newest version is a legacy " +
-      "committed-empty snapshot: it stays in history, reads as the " +
-      "named empty error, and its number can never be re-committed") {
-    import spark.implicits._
-    val dir = mkTable(30)
-    MergeTable.upsert(spark, dir, Seq((1L, "x")).toDF("key", "value"))
-    MergeTable.upsert(spark, dir, Seq((2L, "y")).toDF("key", "value"))
-    // rewrite v2's manifest to the legacy empty form (zero bytes): the
-    // pre-header writer's representation of an all-rows-deleted
-    // commit, now sitting BELOW the non-empty v3
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v2 = new org.apache.hadoop.fs.Path(s"$dir/_manifests/v000000002")
-    fs.delete(v2, false)
-    fs.create(v2, true).close()
-    assert(MergeTable.versions(spark, dir) === Seq(1L, 2L, 3L),
-      "a legacy empty snapshot below the top is committed history")
-    val err = intercept[IllegalStateException] {
-      MergeTable.readTable(spark, dir, Some(2L)).count()
-    }
-    assert(err.getMessage.contains("EMPTY"))
-    // its version number is history — re-committing it would hand two
-    // different contents the same version id
-    val reuse = intercept[IllegalArgumentException] {
-      MergeTable.commitManifest(spark, dir, 2L,
-        Seq("v=2-0x0/bucket=aa/w.parquet"))
-    }
-    assert(reuse.getMessage.contains("legacy committed-empty"))
-    // the table itself still reads at head and at v1/v3
-    assert(MergeTable.readTable(spark, dir).count() === 30L)
-    assert(MergeTable.readTable(spark, dir, Some(1L)).count() === 30L)
   }
 
   test("a vacuum sweeping the loser's promotion temp mid-commit maps " +
@@ -753,16 +673,26 @@ class MergeTableSpec extends SparkSpec {
     assert(MergeTable.versions(spark, dir) === Seq(1L, 2L))
   }
 
-  test("a version whose every row died reads as a NAMED empty-table " +
-      "error, and the prior version still reads in full") {
+  test("a table whose every row was deleted reads as zero rows with " +
+      "the table's schema, takes new rows, and time-travels back to " +
+      "the pre-delete version") {
     import spark.implicits._
     val dir = mkTable(10)
-    MergeTable.deleteKeys(spark, dir, (1L to 10L).toDF("key"))
-    val err = intercept[IllegalStateException] {
-      MergeTable.readTable(spark, dir).count()
-    }
-    assert(err.getMessage.contains("EMPTY"))
+    val schema = MergeTable.readTable(spark, dir).schema
+    val del = MergeTable.deleteKeys(spark, dir, (1L to 10L).toDF("key"))
+    assert(del.rowsMatched === 10L && del.filesWritten === 0L)
+    val emptied = MergeTable.readTable(spark, dir)
+    assert(emptied.schema === schema)
+    assert(emptied.count() === 0L)
+    assert(MergeTable.fsckDeep(spark, dir).bucketsChecked === 0L)
+    val up = MergeTable.upsert(spark, dir,
+      Seq((3L, "back"), (42L, "new")).toDF("key", "value"))
+    assert(up.rowsMatched === 0L && up.rowsInserted === 2L)
+    assert(MergeTable.readTable(spark, dir).select("key", "value")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap ===
+      Map(3L -> "back", 42L -> "new"))
     assert(MergeTable.readTable(spark, dir, Some(1L)).count() === 10L)
+    assert(MergeTable.readTable(spark, dir, Some(2L)).count() === 0L)
   }
 
   test("a mismatched key column on an existing table throws") {
@@ -778,25 +708,21 @@ class MergeTableSpec extends SparkSpec {
   test("fingerprint comparison is 128-bit: a bucket whose SECOND hash " +
       "channel differs is flagged changed even when rows and the first " +
       "sum collide (the h1-cancelling-delta case the old 64-bit sum " +
-      "could not distinguish); a legacy two-component attestation " +
-      "still agrees on its common prefix") {
+      "could not distinguish)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-fp128")
       .resolve("t").toString
     // crafted manifests: same rows (2) and same h1 (100) — exactly what
     // two offsetting payload changes whose seed-42 deltas cancel would
     // attest — but the independent fp2 channel disagrees
+    val schema = """{"type":"struct","fields":[]}"""
     MergeTable.commitManifest(spark, dir, 1L,
-      Seq("v=1-0x0/bucket=aa/a.parquet"), fps = Map("aa" -> "2:100:555"))
+      Seq("v=1-0x0/bucket=aa/a.parquet"), fps = Map("aa" -> "2:100:555"),
+      eschs = Map("v=1-0x0" -> schema))
     MergeTable.commitManifest(spark, dir, 2L,
-      Seq("v=2-0x0/bucket=aa/b.parquet"), fps = Map("aa" -> "2:100:666"))
+      Seq("v=2-0x0/bucket=aa/b.parquet"), fps = Map("aa" -> "2:100:666"),
+      eschs = Map("v=2-0x0" -> schema))
     assert(MergeTable.changedBuckets(spark, dir, 1L, 2L) === Seq("aa"),
       "an h1 collision must not slip past the second channel")
-    // legacy (pre-upgrade) endpoint: two components compare on the
-    // common prefix — the old 64-bit guarantee, not a spurious rescan
-    MergeTable.commitManifest(spark, dir, 3L,
-      Seq("v=2-0x0/bucket=aa/b.parquet"), fps = Map("aa" -> "2:100"))
-    assert(MergeTable.changedBuckets(spark, dir, 2L, 3L) === Seq.empty,
-      "a legacy attestation agreeing on rows+h1 must prune")
     // and a freshly-written table attests THREE components
     val t = mkTable(20)
     val fs = new org.apache.hadoop.fs.Path(t)

@@ -55,6 +55,22 @@ class WidenColumnSpec extends SparkSpec {
     assert(MergeTable.fsckDeep(spark, dir, Some(1L)).mismatched.isEmpty)
   }
 
+  test("an emptied table widens as a metadata commit: it reads as " +
+      "zero rows of the widened type and takes a wide row") {
+    import spark.implicits._
+    val dir = mkTable(8)
+    MergeTable.deleteKeys(spark, dir, (1L to 8L).toDF("key")): Unit
+    MergeTable.widenColumn(spark, dir, "qty", "bigint"): Unit
+    val emptied = MergeTable.readTable(spark, dir)
+    assert(emptied.schema("qty").dataType === LongType)
+    assert(emptied.count() === 0L)
+    MergeTable.upsert(spark, dir,
+      Seq((1L, 3_000_000_000L, 0.5f)).toDF("key", "qty", "ratio")): Unit
+    assert(MergeTable.readTable(spark, dir).select("qty").collect()
+      .map(_.getLong(0)).toSeq === Seq(3_000_000_000L))
+    assert(MergeTable.fsckDeep(spark, dir).mismatched.isEmpty)
+  }
+
   test("the widen window is CDC-QUIET; a post-widen write is not") {
     import spark.implicits._
     val dir = mkTable()

@@ -146,58 +146,6 @@ class StatsFilePruningSpec extends SparkSpec {
       Seq(ks(1)))
   }
 
-  test("the wire format version-gates typed bounds: `#st=` lines " +
-      "carry ONLY tokens a pre-typed-stats reader parses (bare longs " +
-      "/ all-null), string `s<hex>` bounds ride `#st2=` — so a legacy " +
-      "toLongOption reader never mis-reads a string column as " +
-      "all-null and wrongly prunes") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sfp-v")
-      .resolve("t").toString
-    val rows = (1 to 640).map(i => (i.toLong, f"sv$i%04d", i * 10L))
-    MergeTable.create(rows.toDF("key", "sval", "cents"), dir, "key",
-      hexDigits = 1)
-    MergeTable.optimize(spark, dir, "sval", maxRecordsPerFile = Some(50L))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = new org.apache.hadoop.fs.Path(s"$dir/_manifests")
-    val lines = fs.listStatus(md).filter(_.isFile).toSeq.flatMap { st =>
-      val in = fs.open(st.getPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    val st1 = lines.filter(_.startsWith("#st="))
-    val st2 = lines.filter(_.startsWith("#st2="))
-    assert(st1.nonEmpty && st2.nonEmpty,
-      "both generations of stats lines must be present")
-    // every #st= token must round-trip through the LEGACY parse:
-    // toLongOption, with `::` meaning all-null — nothing a pre-r15
-    // reader would turn into a wrong (None, None) prune
-    st1.foreach { l =>
-      val body = l.drop(4).dropWhile(_ != '|').drop(1)
-      body.split('|').filter(_.nonEmpty).foreach { seg =>
-        seg.split(":", -1) match {
-          case Array(_, mn, mx) =>
-            assert((mn.isEmpty && mx.isEmpty) ||
-              (mn.toLongOption.isDefined && mx.toLongOption.isDefined),
-              s"legacy #st= line carries a non-legacy token: $seg")
-          case _ => fail(s"malformed stats segment: $seg")
-        }
-      }
-    }
-    // the string column's bounds appear ONLY under #st2=
-    assert(!st1.exists(_.contains("sval:")),
-      "string bounds must not ride the legacy header")
-    assert(st2.forall(_.contains("sval:")) && st2.exists(_.contains(":s")))
-    // and the merged read still prunes + answers exactly
-    val q = MergeTable.readTable(spark, dir)
-      .filter(col("sval") >= "sv0100" && col("sval") < "sv0200")
-    assert(scanFiles(q) < scanFiles(MergeTable.readTable(spark, dir)))
-    assert(q.count() === 100L)
-    val qi = MergeTable.readTable(spark, dir)
-      .filter(col("cents") === 500L)
-    assert(qi.count() === 1L)
-  }
 
   test("string bounds TRUNCATE WIDE: a >16-code-point value sharing a " +
       "16-cp prefix with the predicate literal is never pruned away " +
